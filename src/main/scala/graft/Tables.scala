@@ -42,51 +42,10 @@ object Tables {
           df.withColumn("ts", col("ts").cast("timestamp"))
         case _ => df
       }
-    } else if (name == "documents" || name == "embeddings") {
-      // the text/blob corpus and the vector corpus: essentially every
-      // consumer runs a per-row kernel (tokenize / shingle / hash /
-      // regex / container decode / rotation / norm) in the scan
-      // stage, so the scan's parallelism IS the kernel's parallelism
-      // — guard it centrally (the loader is the single seam; see
-      // kernelParallel)
-      kernelParallel(spark.read.parquet(s"$sfDir/$name.parquet"),
-        s"$sfDir/$name")
     } else spark.read.parquet(s"$sfDir/$name.parquet")
   }
 
   /** Register every table as a temp view (for the SQL surface). */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
-
-  /** Guard a corpus scan whose per-row KERNEL work (tokenize /
-    * shingle / hash / decode) dominates the query: when the file
-    * layout under-parallelizes the scan, redistribute the rows to the
-    * session's parallelism BEFORE the kernel runs — optimization
-    * guide §2.5's input-skew remedy ("one huge unsplittable file …
-    * repartition immediately after the read").
-    *
-    * Why the scan under-parallelizes at bench SF: a 15 MB
-    * documents.parquet is floored at ~4 splits by
-    * `spark.sql.files.openCostInBytes` (4 MB), so a 32-core session
-    * ran every text kernel on ≤ 4 tasks (measured: d02 wall 1.96 s
-    * with only 4.2 task-seconds of work — straggler-bound, not
-    * compute-bound). At production file counts/sizes the scan
-    * already meets the session parallelism and this is the IDENTITY
-    * — no shuffle is added, so it is a scale-correct guard, not a
-    * local-mode constant. The partition-count check is planning-only
-    * (no job); the round-robin exchange is deterministic under retry
-    * (sortBeforeRepartition, Spark default). */
-  /** The under-parallelized check plans the scan once; the decision is
-    * cached per (session, key) — the split of a fixed file set under a
-    * fixed session is stable, and re-planning it on every `load` call
-    * would tax every query's driver path. */
-  private val splitCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Boolean]
-  private def kernelParallel(df: DataFrame, key: String): DataFrame = {
-    val s = df.sparkSession
-    val target = s.sparkContext.defaultParallelism
-    val under = splitCache.getOrElseUpdate((s, key),
-      df.queryExecution.toRdd.getNumPartitions < target)
-    if (under) df.repartition(target) else df
-  }
 }

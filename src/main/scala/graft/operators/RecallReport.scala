@@ -252,10 +252,11 @@ object RecallReport {
     // 0.556/0.762 at the claimed-held ef=64; 0.768/0.838 with ef
     // doubled) and drove the r17 correction: ef(n) grows a step
     // earlier AND the graph degree is corpus-adaptive
-    // ([[Similarity.knnK]]) — the DiagW10x miss anatomy showed the
-    // NN was simply not wired into its explored neighborhood at
-    // fixed degree 8. Walk10xSpec pins this section's rows exactly;
-    // SCALING.md "Adaptive-walk extrapolation" publishes them.
+    // ([[Similarity.knnK]]) — a per-miss anatomy showed the NN was
+    // simply not wired into its explored neighborhood at fixed
+    // degree 8 (miss_nn_linked 5/190). Walk10xSpec pins this
+    // section's rows exactly; SCALING.md "Adaptive-walk
+    // extrapolation" publishes them.
     val w10x = if (!sections("walk10x")) Nil else {
       val xdir = Walk10x.dir(s)
       val xembs = Similarity.embVectors(s, xdir)

@@ -48,20 +48,13 @@ object AnnStream {
       .options(options).parquet(dir)
       .select(col("vec_id").as("q_id"), col("embedding"))
 
-  private def asQueries(q: DataFrame): Dataset[QueryVec] = {
-    val spark = q.sparkSession
-    import spark.implicits._
-    q.as[QueryVec]
-  }
-
-  /** The replay guard on the classic state API: admit each q_id
-    * once. Intra-batch duplicates admit the first arrival (rows
-    * iterate in arrival order; ids tie-break nothing — equal ids ARE
-    * the duplicate case). */
+  /** The replay guard: admit each q_id once. Intra-batch duplicates
+    * admit the first arrival (rows iterate in arrival order; ids
+    * tie-break nothing — equal ids ARE the duplicate case). */
   def admittedOnce(q: DataFrame): Dataset[QueryVec] = {
     val spark = q.sparkSession
     import spark.implicits._
-    asQueries(q).groupByKey(_.q_id)
+    q.as[QueryVec].groupByKey(_.q_id)
       .flatMapGroupsWithState[Boolean, QueryVec](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: Long, rows: Iterator[QueryVec], state: GroupState[Boolean]) =>
@@ -71,38 +64,6 @@ object AnnStream {
             rows.take(1)
           }
       }
-  }
-
-  /** The same guard on the Spark 4 arbitrary-state API
-    * (`transformWithState`, RocksDB at scale): presence is a
-    * ValueState[Boolean] — one flag per served query. */
-  class AdmitProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, QueryVec, QueryVec] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var served: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      served = getHandle.getValueState[Boolean]("served",
-        org.apache.spark.sql.Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[QueryVec],
-        tv: TimerValues): Iterator[QueryVec] =
-      if (served.exists()) Iterator.empty
-      else {
-        served.update(true)
-        rows.take(1)
-      }
-  }
-
-  /** [[admittedOnce]] via transformWithState (see [[AdmitProcessor]]). */
-  def admittedOnceTws(q: DataFrame): Dataset[QueryVec] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = q.sparkSession
-    import spark.implicits._
-    asQueries(q).groupByKey(_.q_id)
-      .transformWithState(new AdmitProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   /** Trigger-side serving: the admitted queries through the frozen

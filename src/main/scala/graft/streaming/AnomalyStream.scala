@@ -42,8 +42,8 @@ object AnomalyStream {
 
   /** Score one closing minute against the closed-minute baseline —
     * the exact batch-e05 arithmetic (integer sums, fixed double
-    * expression, HALF_UP rounding), shared by both state-API faces so
-    * their parity is by construction. */
+    * expression, HALF_UP rounding), so parity with batch e05 is by
+    * construction. */
   private def score(typ: String, em: Long, c: Long, closed: Vector[Long],
       minObs: Int, zThreshold: Double): Option[MinuteFlag] = {
     val k = closed.length
@@ -97,71 +97,5 @@ object AnomalyStream {
           state.update(SeriesState(openNow -- closing, closed))
           out.result().iterator
       }
-  }
-
-  /** Closed-minute deque for the transformWithState form (≤ lookback
-    * counts — a bounded rewrite, so ValueState is the right store). */
-  final case class ClosedCounts(counts: Seq[Long])
-
-  /** The same series logic on the Spark 4 arbitrary-state API. The
-    * open-minute counts move from an in-value Map to a real
-    * `MapState`: arrivals become per-key point updates in RocksDB
-    * instead of a full Map rewrite per batch — the scale win when a
-    * type has many concurrently-open minutes (late/out-of-order
-    * feeds). Closing, scoring, and the deque trim are identical to
-    * [[flags]] via [[score]]; StreamAnomalySpec asserts both faces
-    * against batch e05. */
-  class AnomalyProcessor(lookback: Int, minObs: Int, zThreshold: Double)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, (String, Long), MinuteFlag] {
-    import org.apache.spark.sql.streaming.{MapState, OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-    @transient private var open: MapState[Long, Long] = _
-    @transient private var closed: ValueState[ClosedCounts] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      open = getHandle.getMapState[Long, Long]("open",
-        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-      closed = getHandle.getValueState[ClosedCounts]("closed",
-        Encoders.product[ClosedCounts], TTLConfig.NONE)
-    }
-
-    override def handleInputRows(typ: String,
-        rows: Iterator[(String, Long)],
-        tv: TimerValues): Iterator[MinuteFlag] = {
-      rows.foreach { case (_, em) =>
-        val cur = if (open.containsKey(em)) open.getValue(em) else 0L
-        open.updateValue(em, cur + 1L)
-      }
-      val openKeys = open.keys().toVector
-      val maxEm = openKeys.max
-      val closing = openKeys.filter(_ < maxEm).sorted
-      val out = Vector.newBuilder[MinuteFlag]
-      var cl = if (closed.exists()) closed.get().counts.toVector
-        else Vector.empty[Long]
-      closing.foreach { em =>
-        val c = open.getValue(em)
-        score(typ, em, c, cl, minObs, zThreshold).foreach(out += _)
-        cl = (cl :+ c).takeRight(lookback)
-        open.removeKey(em)
-      }
-      closed.update(ClosedCounts(cl))
-      out.result().iterator
-    }
-  }
-
-  /** [[flags]] via transformWithState (see [[AnomalyProcessor]]). */
-  def flagsTws(events: DataFrame, lookback: Int = 30, minObs: Int = 10,
-      zThreshold: Double = 2.5): Dataset[MinuteFlag] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val s = events.sparkSession
-    import s.implicits._
-    events
-      .select($"event_type",
-        (floor(unix_micros($"ts") / 60000000L)).as("em"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new AnomalyProcessor(lookback, minObs, zThreshold),
-        TimeMode.None(), OutputMode.Append())
   }
 }

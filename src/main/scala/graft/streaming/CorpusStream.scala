@@ -37,9 +37,9 @@ object CorpusStream {
 
   final case class CuratedDoc(doc_id: Long, quality: Double, fp: Long)
 
-  /** Shared scoring/gating/fingerprint projection — one expression
-    * tree for both state-API faces, so their admission semantics are
-    * identical by construction. */
+  /** Scoring/gating/fingerprint projection — the t02 quality
+    * expression and d01 fingerprint, so admission semantics match
+    * batch by construction. */
   private def scored(docs: DataFrame, minQuality: Double)
       : org.apache.spark.sql.Dataset[CuratedDoc] = {
     val spark = docs.sparkSession
@@ -63,42 +63,6 @@ object CorpusStream {
         if (state.exists) Iterator.empty
         else { state.update(true); Iterator.single(rows.minBy(_.doc_id)) }
       }
-      .toDF()
-  }
-
-  /** The same admission logic on the Spark 4 arbitrary-state API: one
-    * ValueState[Boolean] per fingerprint on the RocksDB store (the
-    * seen-forever flag — state is one boolean per DISTINCT document
-    * ever admitted or rejected as duplicate, the minimal all-time
-    * dedup memory). First batch wins; within a batch the minimum
-    * doc_id wins via the same per-group minBy. StreamCurationSpec
-    * asserts parity with [[curateStream]] and batch d01 keeper sets. */
-  class CurateProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, CuratedDoc, CuratedDoc] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var seen: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean]("seen",
-        org.apache.spark.sql.Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[CuratedDoc],
-        tv: TimerValues): Iterator[CuratedDoc] = {
-      if (seen.exists()) Iterator.empty
-      else { seen.update(true); Iterator.single(rows.minBy(_.doc_id)) }
-    }
-  }
-
-  /** [[curateStream]] via transformWithState (see [[CurateProcessor]]). */
-  def curateStreamTws(docs: DataFrame, minQuality: Double = 0.5): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    scored(docs, minQuality)
-      .groupByKey(_.fp)
-      .transformWithState(new CurateProcessor,
-        TimeMode.None(), OutputMode.Append())
       .toDF()
   }
 }

@@ -66,8 +66,8 @@ object DedupStream {
     math.rint(agree.toDouble / a.length * 10000) / 10000
   }
 
-  /** Signature + band-key build shared by both state-API faces —
-    * bit-identical bucketing to batch d03. */
+  /** Signature + band-key build — bit-identical bucketing to batch
+    * d03. */
   private def bandRows(docs: DataFrame): Dataset[BandRow] = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -114,62 +114,5 @@ object DedupStream {
           state.update(BucketMembers(members))
           out.result().iterator
       }
-  }
-
-  /** One bucket member for the transformWithState form: a ListState
-    * element, so state grows by APPEND — RocksDB merges new members
-    * without deserializing the bucket, where the
-    * flatMapGroupsWithState form rewrites the whole member Seq per
-    * batch. That append-vs-rewrite difference is the scale win for
-    * hot buckets (the same skew the batch `maxBucket` cap manages). */
-  case class Member(doc_id: Long, sig: Seq[Long])
-
-  /** The same bucket logic on the Spark 4 arbitrary-state API
-    * (`transformWithState`, RocksDB state store at scale). Pairing,
-    * thresholding, re-delivery no-op, and intra-batch doc_id ordering
-    * are identical to [[nearDupPairs]] — StreamDedupNearDupSpec
-    * asserts both faces against batch d03 and each other. */
-  class NearDupProcessor(threshold: Double)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (Int, String), BandRow, NearDupPair] {
-    import org.apache.spark.sql.streaming.{ListState, OutputMode, TimeMode, TimerValues, TTLConfig}
-    @transient private var members: ListState[Member] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[Member]("members",
-        org.apache.spark.sql.Encoders.product[Member], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Int, String),
-        rows: Iterator[BandRow], tv: TimerValues): Iterator[NearDupPair] = {
-      val all = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-      if (members.exists())
-        members.get().foreach(m => all += (m.doc_id -> m.sig))
-      val stored = all.length
-      val out = Seq.newBuilder[NearDupPair]
-      rows.toSeq.sortBy(_.doc_id).foreach { r =>
-        if (!all.exists(_._1 == r.doc_id)) {
-          all.foreach { case (seenId, seenSig) =>
-            val sim = estSim(seenSig, r.sig)
-            if (sim >= threshold) out += NearDupPair(
-              math.min(seenId, r.doc_id), math.max(seenId, r.doc_id), sim)
-          }
-          all += (r.doc_id -> r.sig)
-        }
-      }
-      val fresh = all.drop(stored).map { case (id, s) => Member(id, s) }
-      if (fresh.nonEmpty) members.appendList(fresh.toArray)
-      out.result().iterator
-    }
-  }
-
-  /** [[nearDupPairs]] via transformWithState (see [[NearDupProcessor]]). */
-  def nearDupPairsTws(docs: DataFrame, threshold: Double = 0.5)
-      : Dataset[NearDupPair] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    bandRows(docs).groupByKey(r => (r.band, r.key))
-      .transformWithState(new NearDupProcessor(threshold),
-        TimeMode.None(), OutputMode.Append())
   }
 }

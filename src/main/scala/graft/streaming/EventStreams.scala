@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, Trigger, StreamingQuery, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger, StreamingQuery, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming face of the engine (SURVEY.md §2.10):
@@ -224,79 +224,6 @@ object EventStreams {
               state.getCurrentWatermarkMs() + 1L))
           out.iterator
       }
-  }
-
-  /** The as-of carry state: latest view ≤ watermark per user. */
-  case class AsOfCarry(hasView: Boolean, vId: Long, vTs: Long)
-
-  /** [[asOfStream]] on the modern arbitrary-state API
-    * (`transformWithState`, Spark 4): the carry is a typed
-    * `ValueState`, the not-yet-flushable events a `ListState`, and the
-    * deferred flush an explicit event-time timer — state lives in the
-    * configured state store (RocksDB at scale: off-heap/on-disk per
-    * executor, the 100 TB answer the flatMapGroupsWithState form
-    * keeps on the JVM heap). Identical semantics and output to
-    * [[asOfStream]]; both are spec-verified against batch a01. */
-  class AsOfProcessor extends StatefulProcessor[
-      Long, (Long, Long, java.sql.Timestamp, String), AsOfMatch] {
-    @transient private var carry: ValueState[AsOfCarry] = _
-    @transient private var buffer: ListState[AsOfBuffered] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      carry = getHandle.getValueState[AsOfCarry]("carry",
-        org.apache.spark.sql.Encoders.product[AsOfCarry], TTLConfig.NONE)
-      buffer = getHandle.getListState[AsOfBuffered]("buffer",
-        org.apache.spark.sql.Encoders.product[AsOfBuffered], TTLConfig.NONE)
-    }
-
-    /** Flush the buffered prefix with ts ≤ watermark in (ts, side)
-      * order; re-arm a timer for whatever stays buffered. */
-    private def flush(uid: Long, incoming: Seq[AsOfBuffered],
-        tv: TimerValues): Iterator[AsOfMatch] = {
-      val wmMicros = tv.getCurrentWatermarkInMs() * 1000L
-      val all = buffer.get().toSeq ++ incoming
-      val (ready, later) = all.partition(_.tsMicros <= wmMicros)
-      var c = if (carry.exists()) carry.get() else AsOfCarry(false, 0L, 0L)
-      val out = ready.sortBy(b => (b.tsMicros, b.side)).flatMap { b =>
-        if (b.side == 0) { c = AsOfCarry(true, b.eventId, b.tsMicros); None }
-        else Some(AsOfMatch(b.eventId, uid,
-          if (c.hasView) Some(c.vId) else None,
-          if (c.hasView) Some((b.tsMicros - c.vTs) / 1000000L) else None))
-      }
-      carry.update(c)
-      if (later.nonEmpty) {
-        buffer.put(later.toArray)
-        getHandle.registerTimer(math.max(
-          later.map(_.tsMicros).min / 1000L, tv.getCurrentWatermarkInMs() + 1L))
-      } else buffer.clear()
-      out.iterator
-    }
-
-    override def handleInputRows(uid: Long,
-        rows: Iterator[(Long, Long, java.sql.Timestamp, String)],
-        tv: TimerValues): Iterator[AsOfMatch] =
-      flush(uid, rows.map { case (id, _, ts, tpe) =>
-        AsOfBuffered(micros(ts), id, if (tpe == "view") 0 else 1)
-      }.toSeq, tv)
-
-    override def handleExpiredTimer(uid: Long, tv: TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[AsOfMatch] = flush(uid, Nil, tv)
-  }
-
-  /** asOfStream via transformWithState (see [[AsOfProcessor]]). */
-  def asOfStreamTws(events: DataFrame, watermarkDelay: String = "1 hour")
-      : Dataset[AsOfMatch] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      .withWatermark("ts", watermarkDelay)
-      .as[(Long, Long, java.sql.Timestamp, String)]
-      .groupByKey(_._2)
-      .transformWithState(new AsOfProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Streaming as-of with a staleness tolerance (batch a02's

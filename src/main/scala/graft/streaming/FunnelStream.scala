@@ -16,11 +16,6 @@ case class FunnelState(tv: Option[Long], tc: Option[Long], tp: Option[Long])
   * (timestamps truncated to seconds before differencing). */
 case class StageHit(user_id: Long, stage: String, lag_sec: Long)
 
-/** Flat funnel state for the transformWithState form (ValueState
-  * encoders prefer flat case classes over Options). */
-case class FunnelTws(hasV: Boolean, tv: Long, hasC: Boolean, tc: Long,
-    hasP: Boolean, tp: Long)
-
 /** Streaming face of the batch e06 conversion funnel
   * ([[graft.operators.Relational8.e06]]): per-user ordered stage
   * detection as events arrive, emitting one [[StageHit]] the moment a
@@ -79,61 +74,5 @@ object FunnelStream {
           state.update(st)
           out.result().iterator
       }
-  }
-
-  /** The same funnel via `transformWithState` (Spark 4 arbitrary-state
-    * API): state is a typed `ValueState` living in the configured
-    * state store — RocksDB at scale, off-heap/on-disk per executor,
-    * where the flatMapGroupsWithState form keeps it on the JVM heap.
-    * No timers: the funnel never defers emission (it fires the moment
-    * a stage completes), so TimeMode.None. Identical output to
-    * [[stages]]; StreamFunnelSpec asserts both against the batch
-    * contract and each other. */
-  class FunnelProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, String, Long), StageHit] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var st: ValueState[FunnelTws] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FunnelTws]("funnel",
-        org.apache.spark.sql.Encoders.product[FunnelTws], TTLConfig.NONE)
-
-    override def handleInputRows(uid: Long,
-        rows: Iterator[(Long, String, Long)],
-        tv: TimerValues): Iterator[StageHit] = {
-      var s = if (st.exists()) st.get()
-        else FunnelTws(false, 0L, false, 0L, false, 0L)
-      val out = Vector.newBuilder[StageHit]
-      def sec(em: Long): Long = Math.floorDiv(em, 1000000L)
-      rows.toSeq.sortBy(_._3).foreach { case (_, typ, em) =>
-        typ match {
-          case "view" if !s.hasV =>
-            s = s.copy(hasV = true, tv = em)
-            out += StageHit(uid, "1_view", 0L)
-          case "click" if s.hasV && !s.hasC && em > s.tv =>
-            s = s.copy(hasC = true, tc = em)
-            out += StageHit(uid, "2_click", sec(em) - sec(s.tv))
-          case "purchase" if s.hasC && !s.hasP && em > s.tc =>
-            s = s.copy(hasP = true, tp = em)
-            out += StageHit(uid, "3_purchase", sec(em) - sec(s.tc))
-          case _ => ()
-        }
-      }
-      st.update(s)
-      out.result().iterator
-    }
-  }
-
-  /** [[stages]] via transformWithState (see [[FunnelProcessor]]). */
-  def stagesTws(events: DataFrame): Dataset[StageHit] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select($"user_id", $"event_type", unix_micros($"ts").as("em"))
-      .as[(Long, String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new FunnelProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -20,10 +20,11 @@ import graft.operators.Similarity
   * new arrival emits a candidate pair against each stored resident —
   * the union over arrivals is exactly the within-bucket pair set
   * batch candidate generation expands, so the accumulated distinct
-  * pair set EQUALS the batch one (parity-asserted on both state
-  * APIs). The processor deliberately stores only IDS, not vectors:
-  * scoring happens trigger-side with the SAME codegen'd cosine kernel
-  * as batch ([[Similarity.knnFromCandidates]]), which is what makes
+  * pair set EQUALS the batch one (parity-asserted on the default and
+  * RocksDB state stores). The processor deliberately stores only
+  * IDS, not vectors: scoring happens trigger-side with the SAME
+  * codegen'd cosine kernel as batch
+  * ([[Similarity.knnFromCandidates]]), which is what makes
   * stream≡batch parity exact — a Scala-side dot-product
   * reimplementation could drift by an ulp and flip a rank.
   *
@@ -92,52 +93,6 @@ object GraphStream {
           state.update(BucketIds(ids))
           out.result().iterator
       }
-  }
-
-  /** The same bucket logic on the Spark 4 arbitrary-state API
-    * (`transformWithState`, RocksDB at scale): residents live in a
-    * ListState so state grows by APPEND — RocksDB merges new ids
-    * without deserializing the bucket (the DedupStream scale
-    * argument, cheaper still here since elements are bare longs). */
-  class CandProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (Int, Long), BucketVec, CandEdge] {
-    import org.apache.spark.sql.streaming.{ListState, OutputMode, TimeMode, TimerValues, TTLConfig}
-    @transient private var residents: ListState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      residents = getHandle.getListState[Long]("residents",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: (Int, Long),
-        rows: Iterator[BucketVec], tv: TimerValues): Iterator[CandEdge] = {
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      if (residents.exists()) residents.get().foreach(ids += _)
-      val stored = ids.length
-      val out = Seq.newBuilder[CandEdge]
-      rows.toSeq.sortBy(_.vec_id).foreach { r =>
-        if (!ids.contains(r.vec_id)) {
-          ids.foreach { seen =>
-            out += CandEdge(math.min(seen, r.vec_id),
-              math.max(seen, r.vec_id))
-          }
-          ids += r.vec_id
-        }
-      }
-      val fresh = ids.drop(stored)
-      if (fresh.nonEmpty) residents.appendList(fresh.toArray)
-      out.result().iterator
-    }
-  }
-
-  /** [[candidateEdges]] via transformWithState (see [[CandProcessor]]). */
-  def candidateEdgesTws(embs: DataFrame): Dataset[CandEdge] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = embs.sparkSession
-    import spark.implicits._
-    bucketRows(embs).groupByKey(r => (r.rot, r.key))
-      .transformWithState(new CandProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   /** Trigger-side knn refresh: the accumulated (deduped) candidate

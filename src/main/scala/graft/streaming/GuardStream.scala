@@ -28,7 +28,8 @@ case class ConversionRow(user_id: Long, purchase_id: Long, gap_us: Long)
   * (each batch's rows sorted by the batch total order (ts,
   * event_id)) — the TransitionStream contract, satisfied by a
   * user-keyed FIFO source or event-time-ordered file arrival
-  * (StreamGuardSpec replays a time-split corpus on both state APIs).
+  * (StreamGuardSpec replays a time-split corpus on the default and
+  * RocksDB state stores).
   *
   * Scale: one shuffle on user_id (the batch plan's window key);
   * state is two optional longs per user — the per-user sequence is
@@ -36,7 +37,7 @@ case class ConversionRow(user_id: Long, purchase_id: Long, gap_us: Long)
 object GuardStream {
 
   /** Advance a user's NFA through a micro-batch's rows (pre-sorted by
-    * (ts, event_id)) — the shared pure core of both state-API faces. */
+    * (ts, event_id)) — the pure core of [[conversions]]. */
   def advance(user: Long, prev: GuardState, lookbackUs: Long,
       sorted: Seq[(Long, Long, String)])
       : (GuardState, Vector[ConversionRow]) =
@@ -83,41 +84,5 @@ object GuardStream {
           state.update(next)
           out.iterator
       }
-  }
-
-  /** transformWithState face (RocksDB-ready): ValueState per user. */
-  class GuardProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, Long, String), ConversionRow] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-    @transient private var st: ValueState[GuardState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[GuardState]("guard",
-        Encoders.product[GuardState], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long,
-        rows: Iterator[(Long, Long, Long, String)],
-        tv: TimerValues): Iterator[ConversionRow] = {
-      val sorted = rows.map(r => (r._2, r._3, r._4)).toVector
-        .sortBy(r => (r._1, r._2))
-      val prev = if (st.exists()) st.get() else GuardState(None, None)
-      val (next, out) = GuardStream.advance(user, prev,
-        graft.operators.Relational15.E13_LOOKBACK_MIN * 60L * 1000000L, sorted)
-      st.update(next)
-      out.iterator
-    }
-  }
-
-  /** [[conversions]] via transformWithState (see [[GuardProcessor]]). */
-  def conversionsTws(events: DataFrame): Dataset[ConversionRow] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val s = events.sparkSession
-    import s.implicits._
-    keyed(events)
-      .groupByKey(_._1)
-      .transformWithState(new GuardProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -56,7 +56,7 @@ object PatternStream {
   }
 
   /** Append a micro-batch's (pre-sorted) events to the sequence and
-    * evaluate every rule — the shared pure core of both faces. */
+    * evaluate every rule — the pure core of [[patternCounts]]. */
   def advance(user: Long, day: String, prev: String,
       sorted: Seq[(Long, Long, String)])
       : (String, Vector[PatternRow]) = {
@@ -95,40 +95,5 @@ object PatternStream {
           state.update(PatternState(seq))
           out.iterator
       }
-  }
-
-  /** transformWithState face (RocksDB-ready): ValueState per key. */
-  class PatternProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (Long, String), (Long, String, Long, Long, String), PatternRow] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-    @transient private var st: ValueState[PatternState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[PatternState]("pattern",
-        Encoders.product[PatternState], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Long, String),
-        rows: Iterator[(Long, String, Long, Long, String)],
-        tv: TimerValues): Iterator[PatternRow] = {
-      val sorted = rows.map(r => (r._3, r._4, r._5)).toVector
-        .sortBy(r => (r._1, r._2))
-      val prev = if (st.exists()) st.get().seq else ""
-      val (seq, out) = PatternStream.advance(key._1, key._2, prev, sorted)
-      st.update(PatternState(seq))
-      out.iterator
-    }
-  }
-
-  /** [[patternCounts]] via transformWithState. */
-  def patternCountsTws(events: DataFrame): Dataset[PatternRow] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val s = events.sparkSession
-    import s.implicits._
-    keyed(events)
-      .groupByKey(r => (r._1, r._2))
-      .transformWithState(new PatternProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 }

@@ -33,7 +33,7 @@ case class RuleRow(rule: String, upd: Long, n_checked: Long,
   * statistic is mergeable (counts, sums, min, max) — any micro-batch
   * split folds to the same state.
   *
-  * Three faces, all built from the SAME column canon and rule
+  * Two faces, both built from the SAME column canon and rule
   * literals as the batch queries (the IndexStream convention — the
   * faces cannot drift):
   *
@@ -42,9 +42,7 @@ case class RuleRow(rule: String, upd: Long, n_checked: Long,
   *    (column-count-sized, the cheapest face);
   *  - [[profile]]/[[rules]]: flatMapGroupsWithState keyed by
   *    column/rule name with explicit [[ColProfile]]/[[RuleCounts]]
-  *    state, emitting the running profile per batch;
-  *  - [[profileTws]]/[[rulesTws]]: the same processors on
-  *    transformWithState (RocksDB-ready ValueState).
+  *    state, emitting the running profile per batch.
   *
   * What is deliberately NOT streamed: q72's EXACT n_distinct (its
   * state is value-cardinality-sized — [[statsAggHll]] is the live
@@ -123,7 +121,7 @@ object ProfileStream {
   }
 
   /** Fold one batch's cells into a column's running profile — the
-    * shared pure core of both state-API faces. Commutative and
+    * pure core of [[profile]]. Commutative and
     * associative in the batch split, so replay order is free. */
   def foldCells(prev: ColProfile, upd: Long,
       cells: Iterator[(Option[Long], Option[String])]): ColProfile =
@@ -167,40 +165,6 @@ object ProfileStream {
       }
   }
 
-  /** transformWithState face (RocksDB-ready ValueState). */
-  class ProfileProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, (String, Option[Long], Option[String]), ProfileRow] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-    @transient private var st: ValueState[ColProfile] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[ColProfile]("profile",
-        Encoders.product[ColProfile], TTLConfig.NONE)
-
-    override def handleInputRows(name: String,
-        rows: Iterator[(String, Option[Long], Option[String])],
-        tv: TimerValues): Iterator[ProfileRow] = {
-      val prev = if (st.exists()) st.get() else emptyProfile
-      val next = ProfileStream.foldCells(prev, prev.upd + 1,
-        rows.map(r => (r._2, r._3)))
-      st.update(next)
-      Iterator(ProfileStream.render(name, next))
-    }
-  }
-
-  /** [[profile]] via transformWithState. */
-  def profileTws(orders: DataFrame): Dataset[ProfileRow] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val s = orders.sparkSession
-    import s.implicits._
-    stacked(orders)
-      .groupByKey(_._1)
-      .transformWithState(new ProfileProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
   // ---- rule-violation state faces ------------------------------------
 
   /** (rule name, violated) per lineitem row per rule — the q73 rule
@@ -220,7 +184,7 @@ object ProfileStream {
       .as[(String, Long)]
   }
 
-  /** Fold a batch's rule cells — shared pure core. */
+  /** Fold a batch's rule cells — the pure core of [[rules]]. */
   def foldRules(prev: RuleCounts, upd: Long,
       cells: Iterator[Long]): RuleCounts =
     cells.foldLeft(prev.copy(upd = upd)) { (p, v) =>
@@ -246,40 +210,5 @@ object ProfileStream {
           Iterator(RuleRow(rule, next.upd, next.n, next.viol,
             next.viol == 0L))
       }
-  }
-
-  /** transformWithState face for the rule counters. */
-  class RuleProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, (String, Long), RuleRow] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-    @transient private var st: ValueState[RuleCounts] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[RuleCounts]("rules",
-        Encoders.product[RuleCounts], TTLConfig.NONE)
-
-    override def handleInputRows(rule: String,
-        rows: Iterator[(String, Long)],
-        tv: TimerValues): Iterator[RuleRow] = {
-      val prev = if (st.exists()) st.get() else emptyRule
-      val next = ProfileStream.foldRules(prev, prev.upd + 1,
-        rows.map(_._2))
-      st.update(next)
-      Iterator(RuleRow(rule, next.upd, next.n, next.viol,
-        next.viol == 0L))
-    }
-  }
-
-  /** [[rules]] via transformWithState. */
-  def rulesTws(lineitem: DataFrame): Dataset[RuleRow] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val s = lineitem.sparkSession
-    import s.implicits._
-    ruleCells(lineitem)
-      .groupByKey(_._1)
-      .transformWithState(new RuleProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -77,41 +77,6 @@ object SpanStream {
       }
   }
 
-  /** The same count logic on the Spark 4 arbitrary-state API
-    * (`transformWithState`, RocksDB at scale) — a ValueState[Long]
-    * per gram. StreamSpanSpec asserts both faces against the batch
-    * operator and each other. */
-  class HitProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, GramRow, Hit] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var count: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      count = getHandle.getValueState[Long]("count",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[GramRow],
-        tv: TimerValues): Iterator[Hit] = {
-      val batch = rows.toSeq
-      val before = if (count.exists()) count.get() else 0L
-      count.update(before + batch.size)
-      if (before + batch.size > 1)
-        batch.iterator.map(r => Hit(r.doc_id, r.pos))
-      else Iterator.empty
-    }
-  }
-
-  /** [[dupHits]] via transformWithState (see [[HitProcessor]]). */
-  def dupHitsTws(docs: DataFrame): Dataset[Hit] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    gramRows(docs).groupByKey(_.gh)
-      .transformWithState(new HitProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
   /** Merge hit positions into maximal per-document spans — the batch
     * d17 interval merge, applied per micro-batch (inside
     * `foreachBatch` in production; on the collected sink in tests).

@@ -76,42 +76,4 @@ object StreakStream {
         }
       }
   }
-
-  /** The same update logic on the Spark 4 arbitrary-state API
-    * (transformWithState / RocksDB): one ValueState[StreakDays] per
-    * user. StreamStreakSpec asserts parity with [[streaks]] and with
-    * batch e09. */
-  class StreakProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Int), StreakRow] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var st: ValueState[StreakDays] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[StreakDays]("days",
-        org.apache.spark.sql.Encoders.product[StreakDays], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Int)],
-        tv: TimerValues): Iterator[StreakRow] = {
-      val had = if (st.exists()) st.get().days else Array.empty[Int]
-      val merged = (had ++ rows.map(_._2)).distinct.sorted
-      if (merged.length == had.length) Iterator.empty
-      else {
-        st.update(StreakDays(merged))
-        val (nd, best) = StreakStream.fold(merged)
-        Iterator.single(StreakRow(key, nd, best))
-      }
-    }
-  }
-
-  /** [[streaks]] via transformWithState (see [[StreakProcessor]]). */
-  def streaksTws(events: DataFrame): Dataset[StreakRow] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    typedDays(events)
-      .groupByKey(_._1)
-      .transformWithState(new StreakProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
 }

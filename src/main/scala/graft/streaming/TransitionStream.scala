@@ -32,8 +32,9 @@ case class TransRow(user_id: Long, from_type: String, to_type: String)
   * files arrive in event-time order. Under that contract the emitted
   * transition multiset after any replay equals the batch lag-window
   * derivation EXACTLY — micro-batch splits immaterial
-  * (StreamTransitionSpec replays a time-split corpus on both state
-  * APIs and asserts bit-equality of the aggregated matrix).
+  * (StreamTransitionSpec replays a time-split corpus on the default
+  * and RocksDB state stores and asserts bit-equality of the
+  * aggregated matrix).
   *
   * Scale: one shuffle on user_id (the batch plan's key); state is one
   * triple per user regardless of event volume — the lag window's
@@ -41,8 +42,8 @@ case class TransRow(user_id: Long, from_type: String, to_type: String)
 object TransitionStream {
 
   /** Advance a user's last-event state through a micro-batch's rows
-    * (pre-sorted by (ts, event_id)) — the shared pure core of both
-    * state-API faces: fold left, emit one TransRow per step that has
+    * (pre-sorted by (ts, event_id)) — the pure core of
+    * [[transitions]]: fold left, emit one TransRow per step that has
     * a predecessor. */
   def advance(user: Long, prev: Option[LastEvent],
       sorted: Seq[(Long, Long, String)])
@@ -80,40 +81,5 @@ object TransitionStream {
           next.foreach(state.update)
           out.iterator
       }
-  }
-
-  /** transformWithState face (RocksDB-ready): ValueState per user. */
-  class TransitionProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, Long, String), TransRow] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-    @transient private var last: ValueState[LastEvent] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[LastEvent]("last",
-        Encoders.product[LastEvent], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long,
-        rows: Iterator[(Long, Long, Long, String)],
-        tv: TimerValues): Iterator[TransRow] = {
-      val sorted = rows.map(r => (r._2, r._3, r._4)).toVector
-        .sortBy(r => (r._1, r._2))
-      val prev = if (last.exists()) Some(last.get()) else None
-      val (next, out) = advance(user, prev, sorted)
-      next.foreach(last.update)
-      out.iterator
-    }
-  }
-
-  /** [[transitions]] via transformWithState (see [[TransitionProcessor]]). */
-  def transitionsTws(events: DataFrame): Dataset[TransRow] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val s = events.sparkSession
-    import s.implicits._
-    keyed(events)
-      .groupByKey(_._1)
-      .transformWithState(new TransitionProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 }

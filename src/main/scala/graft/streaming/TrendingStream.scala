@@ -18,7 +18,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * last-emission convention. Counts are exact integers with the batch
   * query's total (n desc, user) tie-break, so after full replay the
   * final board per window equals batch e11's rows EXACTLY — arrival
-  * order, micro-batch splits, and state API all immaterial.
+  * order, micro-batch splits, and state store all immaterial.
   *
   * State per window: the active-user count map (≤ distinct users that
   * touched the window — the same bound any per-entity windowed
@@ -37,9 +37,8 @@ object TrendingStream {
 
   private val MICROS_PER_DAY = 86400000000L
 
-  /** The board: top-k of the count map under the batch tie-break —
-    * shared by both state-API faces, so their parity (and parity with
-    * batch e11's TopDocs cut) is by construction. */
+  /** The board: top-k of the count map under the batch tie-break,
+    * so parity with batch e11's TopDocs cut is by construction. */
   private def board(day: Long, upd: Long, counts: Map[Long, Long], k: Int)
       : Vector[TrendRow] = {
     val ts = new java.sql.Timestamp(day * (MICROS_PER_DAY / 1000))
@@ -69,48 +68,5 @@ object TrendingStream {
           state.update(DayState(counts, upd))
           board(day, upd, counts, k).iterator
       }
-  }
-
-  /** transformWithState face (RocksDB-ready): MapState per window so a
-    * hot window's counts never deserialize wholesale per batch. */
-  class TrendingProcessor(k: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long), TrendRow] {
-    import org.apache.spark.sql.streaming.{MapState, OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-    @transient private var counts: MapState[Long, Long] = _
-    @transient private var upd: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      counts = getHandle.getMapState[Long, Long]("counts",
-        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-      upd = getHandle.getValueState[Long]("upd",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(day: Long, rows: Iterator[(Long, Long)],
-        tv: TimerValues): Iterator[TrendRow] = {
-      rows.foreach { case (_, user) =>
-        val cur = if (counts.containsKey(user)) counts.getValue(user) else 0L
-        counts.updateValue(user, cur + 1L)
-      }
-      val u = (if (upd.exists()) upd.get() else 0L) + 1L
-      upd.update(u)
-      val m = counts.keys().map(u => u -> counts.getValue(u)).toMap
-      board(day, u, m, k).iterator
-    }
-  }
-
-  /** [[trending]] via transformWithState (see [[TrendingProcessor]]). */
-  def trendingTws(events: DataFrame, k: Int = 3): Dataset[TrendRow] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val s = events.sparkSession
-    import s.implicits._
-    events
-      .select(floor(unix_micros($"ts") / MICROS_PER_DAY).as("day"), $"user_id")
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new TrendingProcessor(k),
-        TimeMode.None(), OutputMode.Append())
   }
 }

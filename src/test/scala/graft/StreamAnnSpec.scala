@@ -8,7 +8,7 @@ import graft.operators.Relational13
   * previous query — the source-replay case), the replay guard must
   * admit each q_id exactly once, and the trigger-side serve over the
   * frozen IVF-PQ index must reproduce batch s14 row for row — on
-  * both state APIs. */
+  * the default and RocksDB state stores. */
 class StreamAnnSpec extends SparkSpec {
 
   test("streaming graph-walk serve equals batch s20m") {
@@ -237,21 +237,22 @@ class StreamAnnSpec extends SparkSpec {
           s"${served.zip(batch).find(p => p._1 != p._2)}")
     } finally q.stop()
 
-    // the transformWithState face (ValueState flag on RocksDB)
+    // the same guard with its flags on RocksDB
     StreamTestIO.withRocksDB(spark) {
       val q2 = EventStreams.runToMemory(
-        AnnStream.admittedOnceTws(
+        AnnStream.admittedOnce(
           AnnStream.queryStream(spark, dir.toString,
             Map("maxFilesPerTrigger" -> "1"))).toDF(),
-        "ann_stream_tws", mode = "append")
+        "ann_stream_rocksdb", mode = "append")
       try {
-        val admitted = spark.table("ann_stream_tws")
+        val admitted = spark.table("ann_stream_rocksdb")
         val ids = admitted.select($"q_id").collect().map(_.getLong(0)).sorted
         assert(ids.toSeq == (0L until Relational13.PQ_NQ).toSeq)
         val served = AnnStream.serveRefresh(spark, sf, admitted)
           .collect().map(_.toSeq).toSeq
         assert(served == batch,
-          s"tws serve diverged from batch s14: sizes ${served.size}/${batch.size}")
+          s"RocksDB serve diverged from batch s14: sizes " +
+            s"${served.size}/${batch.size}")
       } finally q2.stop()
     }
   }

@@ -63,32 +63,22 @@ class StreamAsOfSpec extends SparkSpec {
           s"sizes ${streamed.size}/${batch.size}")
     } finally q.stop()
 
-    // transformWithState form over the same staged stream: identical
-    // output to the flatMapGroupsWithState form = batch a01, with
-    // state in RocksDB (the at-scale store)
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val qT = EventStreams.runToMemory(
-        EventStreams.asOfStreamTws(
+    // the same face over the same staged stream with state in RocksDB
+    // (the at-scale store): output still equals batch a01
+    StreamTestIO.withRocksDB(spark) {
+      val qR = EventStreams.runToMemory(
+        EventStreams.asOfStream(
           EventStreams.stream(spark, dir.toString,
             Map("maxFilesPerTrigger" -> "1"))).toDF(),
-        "asof_tws_stream", mode = "append")
+        "asof_rocksdb_stream", mode = "append")
       try {
-        val streamed = spark.table("asof_tws_stream")
+        val streamed = spark.table("asof_rocksdb_stream")
           .collect().map(_.toSeq).toSet
         val batch = graft.operators.AsOfJoin.a01(spark, sf)
           .collect().map(_.toSeq).toSet
         assert(streamed == batch,
-          s"tws stream vs batch a01: sizes ${streamed.size}/${batch.size}")
-      } finally qT.stop()
-    } finally prevProvider match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+          s"RocksDB stream vs batch a01: sizes ${streamed.size}/${batch.size}")
+      } finally qR.stop()
     }
 
     // tolerance variant over the same staged stream = batch a02

@@ -16,9 +16,8 @@ object StreamTestIO {
     dest.toFile.setLastModified(mtime)
   }
 
-  /** Run `body` with the RocksDB state-store provider — the store the
-    * transformWithState faces target at scale — restoring the prior
-    * provider after. */
+  /** Run `body` with the RocksDB state-store provider — the at-scale
+    * store — restoring the prior provider after. */
   def withRocksDB[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
@@ -67,20 +66,20 @@ class StreamDedupNearDupSpec extends SparkSpec {
           s"sizes ${streamed.size}/${batch.size}")
       assert(streamed.nonEmpty)
 
-      // the transformWithState face (ListState bucket members on the
-      // RocksDB store) emits the same distinct pair set
+      // the same face with bucket members on the RocksDB store emits
+      // the same distinct pair set
       StreamTestIO.withRocksDB(spark) {
         val q2 = EventStreams.runToMemory(
-          DedupStream.nearDupPairsTws(
+          DedupStream.nearDupPairs(
             DedupStream.documentStream(spark, dir.toString,
               Map("maxFilesPerTrigger" -> "1"))).toDF(),
-          "neardup_stream_tws", mode = "append")
+          "neardup_stream_rocksdb", mode = "append")
         try {
-          val tws = spark.table("neardup_stream_tws")
+          val rocks = spark.table("neardup_stream_rocksdb")
             .dropDuplicates("a_id", "b_id")
             .collect().map(_.toSeq).toSet
-          assert(tws == batch,
-            s"transformWithState near-dup diverged: sizes ${tws.size}/${batch.size}")
+          assert(rocks == batch,
+            s"RocksDB near-dup diverged: sizes ${rocks.size}/${batch.size}")
         } finally q2.stop()
       }
     } finally q.stop()
@@ -221,20 +220,20 @@ class StreamAnomalySpec extends SparkSpec {
         Set(37L, 73L).contains(ts.getTime / 60000L) } == 6,
         s"expected the 2 spikes x 3 series flagged: $streamed")
 
-      // the transformWithState face (MapState open minutes +
-      // ValueState deque on RocksDB) flags the same minutes
+      // the same face with series state on RocksDB flags the same
+      // minutes
       StreamTestIO.withRocksDB(spark) {
         val q2 = EventStreams.runToMemory(
-          graft.streaming.AnomalyStream.flagsTws(
+          graft.streaming.AnomalyStream.flags(
             EventStreams.stream(spark, dir.toString,
               Map("maxFilesPerTrigger" -> "1"))).toDF(),
-          "anomaly_stream_tws", mode = "append")
+          "anomaly_stream_rocksdb", mode = "append")
         try {
-          val tws = spark.table("anomaly_stream_tws")
+          val rocks = spark.table("anomaly_stream_rocksdb")
             .collect().map(r => (r.getString(0), r.getTimestamp(1),
               r.getLong(2), r.getDouble(3))).toSet
-          assert(tws == batch,
-            s"transformWithState anomaly diverged: sizes ${tws.size}/${batch.size}")
+          assert(rocks == batch,
+            s"RocksDB anomaly diverged: sizes ${rocks.size}/${batch.size}")
         } finally q2.stop()
       }
     } finally q.stop()
@@ -280,19 +279,19 @@ class StreamCurationSpec extends SparkSpec {
           s"only-batch=${batch.diff(streamed).take(3)}")
       assert(streamed.nonEmpty && streamed.size < docs.count())
 
-      // the transformWithState face (ValueState[Boolean] per
-      // fingerprint on RocksDB) admits the same set
+      // the same face with the per-fingerprint flag on RocksDB admits
+      // the same set
       StreamTestIO.withRocksDB(spark) {
         val q2 = EventStreams.runToMemory(
-          graft.streaming.CorpusStream.curateStreamTws(
+          graft.streaming.CorpusStream.curateStream(
             DedupStream.documentStream(spark, dir.toString,
               Map("maxFilesPerTrigger" -> "1"))),
-          "curate_stream_tws", mode = "append")
+          "curate_stream_rocksdb", mode = "append")
         try {
-          val tws = spark.table("curate_stream_tws")
+          val rocks = spark.table("curate_stream_rocksdb")
             .select($"doc_id").as[Long].collect().toSet
-          assert(tws == batch,
-            s"transformWithState curation diverged: sizes ${tws.size}/${batch.size}")
+          assert(rocks == batch,
+            s"RocksDB curation diverged: sizes ${rocks.size}/${batch.size}")
         } finally q2.stop()
       }
     } finally q.stop()

@@ -69,31 +69,21 @@ class StreamFunnelSpec extends SparkSpec {
           s"stage $st count mismatch vs batch e06")
       }
 
-      // the transformWithState form (RocksDB state store) emits the
-      // exact same stage set
-      val prev =
-        spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val q2 = EventStreams.runToMemory(
-        FunnelStream.stagesTws(
-          EventStreams.stream(spark, dir.toString,
-            Map("maxFilesPerTrigger" -> "1"))).toDF(),
-        "funnel_stream_tws", mode = "append")
-      try {
-        val tws = spark.table("funnel_stream_tws")
-          .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-          .toSet
-        assert(tws == batch,
-          s"transformWithState funnel diverged: sizes ${tws.size}/${batch.size}")
-      } finally {
-        q2.stop()
-        prev match {
-          case Some(p) => spark.conf
-            .set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => spark.conf
-            .unset("spark.sql.streaming.stateStore.providerClass")
-        }
+      // the same face on the RocksDB state store emits the exact
+      // same stage set
+      StreamTestIO.withRocksDB(spark) {
+        val q2 = EventStreams.runToMemory(
+          FunnelStream.stages(
+            EventStreams.stream(spark, dir.toString,
+              Map("maxFilesPerTrigger" -> "1"))).toDF(),
+          "funnel_stream_rocksdb", mode = "append")
+        try {
+          val rocks = spark.table("funnel_stream_rocksdb")
+            .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+            .toSet
+          assert(rocks == batch,
+            s"RocksDB funnel diverged: sizes ${rocks.size}/${batch.size}")
+        } finally q2.stop()
       }
     } finally q.stop()
   }

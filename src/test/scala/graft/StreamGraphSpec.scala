@@ -8,7 +8,8 @@ import graft.operators.Similarity
   * pairs straddle micro-batches, exercising the cross-batch state
   * path), the accumulated distinct candidate edges must equal batch
   * candidate generation exactly, and the trigger-side refresh over
-  * them must reproduce s11 and s12 row for row — on both state APIs. */
+  * them must reproduce s11 and s12 row for row — on the default and
+  * RocksDB state stores. */
 class StreamGraphSpec extends SparkSpec {
   test("streaming candidate edges + trigger refresh equal batch s11/s12") {
     val s = spark
@@ -61,19 +62,19 @@ class StreamGraphSpec extends SparkSpec {
         s"first diff ${comms.zip(s16b).find(p => p._1 != p._2)}")
     } finally q.stop()
 
-    // the transformWithState face (ListState residents on RocksDB)
-    // emits the same distinct candidate set
+    // the same face with bucket residents on RocksDB emits the same
+    // distinct candidate set
     StreamTestIO.withRocksDB(spark) {
       val q2 = EventStreams.runToMemory(
-        GraphStream.candidateEdgesTws(
+        GraphStream.candidateEdges(
           GraphStream.embeddingStream(spark, dir.toString,
             Map("maxFilesPerTrigger" -> "1"))).toDF(),
-        "graph_stream_tws", mode = "append")
+        "graph_stream_rocksdb", mode = "append")
       try {
-        val tws = spark.table("graph_stream_tws")
+        val rocks = spark.table("graph_stream_rocksdb")
           .dropDuplicates("a_id", "b_id").collect().map(_.toSeq).toSet
-        assert(tws == batchSet,
-          s"transformWithState candidates diverged: sizes ${tws.size}/${batchSet.size}")
+        assert(rocks == batchSet,
+          s"RocksDB candidates diverged: sizes ${rocks.size}/${batchSet.size}")
       } finally q2.stop()
     }
   }

@@ -7,8 +7,8 @@ import graft.streaming.{EventStreams, GuardStream}
   * corpus in time-ordered chunks (per-user (ts) order across
   * micro-batches — the per-key FIFO contract the face documents) and
   * assert the emitted conversion set equals batch e13 bit-for-bit on
-  * both state APIs. All columns are exact integers, so the equality
-  * is bit-level. */
+  * the default and RocksDB state stores. All columns are exact
+  * integers, so the equality is bit-level. */
 class StreamGuardSpec extends SparkSpec {
 
   private def stagedDir(): String = {
@@ -55,11 +55,11 @@ class StreamGuardSpec extends SparkSpec {
     val dir = stagedDir()
     StreamTestIO.withRocksDB(spark) {
       val q = EventStreams.runToMemory(
-        GuardStream.conversionsTws(EventStreams.stream(spark, dir,
+        GuardStream.conversions(EventStreams.stream(spark, dir,
           Map("maxFilesPerTrigger" -> "1"))).toDF(),
-        "guard_stream_tws")
+        "guard_stream_rocksdb")
       try {
-        assert(streamedRows("guard_stream_tws") == batchRows())
+        assert(streamedRows("guard_stream_rocksdb") == batchRows())
       } finally q.stop()
     }
   }

@@ -7,7 +7,8 @@ import graft.streaming.{EventStreams, PatternStream}
   * corpus in time-ordered chunks and assert the FINAL per-group rule
   * counts (the max-`len` row per (user, day, pattern) — sequence
   * length grows monotonically, so it identifies the last update)
-  * aggregate to exactly the batch e15 report, on both state APIs.
+  * aggregate to exactly the batch e15 report, on the default and
+  * RocksDB state stores.
   * All outputs are exact integers, so equality is bit-level. */
 class StreamPatternSpec extends SparkSpec {
 
@@ -64,11 +65,11 @@ class StreamPatternSpec extends SparkSpec {
     val dir = stagedDir()
     StreamTestIO.withRocksDB(spark) {
       val q = EventStreams.runToMemory(
-        PatternStream.patternCountsTws(EventStreams.stream(spark, dir,
+        PatternStream.patternCounts(EventStreams.stream(spark, dir,
           Map("maxFilesPerTrigger" -> "1"))).toDF(),
-        "pattern_stream_tws", mode = "update")
+        "pattern_stream_rocksdb", mode = "update")
       try {
-        assert(streamedReport("pattern_stream_tws") == batchReport())
+        assert(streamedReport("pattern_stream_rocksdb") == batchReport())
       } finally q.stop()
     }
   }

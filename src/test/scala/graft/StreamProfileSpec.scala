@@ -6,9 +6,10 @@ import graft.streaming.{EventStreams, ProfileStream}
 /** Live data quality (the q72/q73 streaming face): replay orders and
   * lineitem in micro-batches and assert the running profile and rule
   * counters equal the batch derivations EXACTLY — on the aggregation
-  * face and on both explicit state APIs. Every maintained statistic
-  * is mergeable, so parity is bit-level and split-order-free (the
-  * chunks here deliberately interleave keys). */
+  * face and on the fmgws face, the latter on the default and RocksDB
+  * state stores. Every maintained statistic is mergeable, so parity
+  * is bit-level and split-order-free (the chunks here deliberately
+  * interleave keys). */
 class StreamProfileSpec extends SparkSpec {
 
   import spark.implicits._
@@ -96,18 +97,18 @@ class StreamProfileSpec extends SparkSpec {
   }
 
   test("streamed profile equals batch q72 pass-1 (transformWithState)") {
-    val dir = chunkedDir("prof-tws", Tables.load(spark, sf, "orders"),
+    val dir = chunkedDir("prof-rocksdb", Tables.load(spark, sf, "orders"),
       "o_orderkey")
     StreamTestIO.withRocksDB(spark) {
       val q = EventStreams.runToMemory(
-        ProfileStream.profileTws(ordersStream(dir)).toDF(), "prof_tws")
+        ProfileStream.profile(ordersStream(dir)).toDF(), "prof_rocksdb")
       try {
-        val streamed = lastPerKey("prof_tws", "col_name").map {
+        val streamed = lastPerKey("prof_rocksdb", "col_name").map {
           case (k, r) => k -> (r.getAs[Long]("n_rows"),
             r.getAs[Long]("n_null"), r.getAs[String]("min_val"),
             r.getAs[String]("max_val"))
         }
-        assert(streamed == batchStats(), "tws face diverges")
+        assert(streamed == batchStats(), "RocksDB face diverges")
       } finally q.stop()
     }
   }
@@ -150,17 +151,17 @@ class StreamProfileSpec extends SparkSpec {
       }
       assert(streamed == want, "rule fmgws face diverges")
     } finally qf.stop()
-    // transformWithState face
-    val dir3 = chunkedDir("rule-tws", li, "l_orderkey")
+    // fmgws face on RocksDB
+    val dir3 = chunkedDir("rule-rocksdb", li, "l_orderkey")
     StreamTestIO.withRocksDB(spark) {
       val qt = EventStreams.runToMemory(
-        ProfileStream.rulesTws(lineitemStream(dir3)).toDF(), "rule_tws")
+        ProfileStream.rules(lineitemStream(dir3)).toDF(), "rule_rocksdb")
       try {
-        val streamed = lastPerKey("rule_tws", "rule").map { case (k, r) =>
+        val streamed = lastPerKey("rule_rocksdb", "rule").map { case (k, r) =>
           k -> (r.getAs[Long]("n_checked"), r.getAs[Long]("n_violations"),
             r.getAs[Boolean]("passed"))
         }
-        assert(streamed == want, "rule tws face diverges")
+        assert(streamed == want, "rule RocksDB face diverges")
       } finally qt.stop()
     }
   }

@@ -9,8 +9,8 @@ import graft.streaming.{EventStreams, SpanStream}
   * gets exercised). Prefix semantics: an even-half doc's spans come
   * from even-half counts only; an odd-half doc sees the whole corpus
   * — exactly the d19 `m_old + m_new > 1` test with the even half as
-  * the frozen state. Both state-API faces must match the brute-force
-  * replay and each other. */
+  * the frozen state. The face must match the brute-force replay on
+  * the default and RocksDB state stores. */
 class StreamSpanSpec extends SparkSpec {
 
   private val W = operators.Relational15.D17_W
@@ -68,11 +68,11 @@ class StreamSpanSpec extends SparkSpec {
     StreamTestIO.writeChunk(docs.filter($"doc_id" % 2 === 1),
       dir.resolve("odd.parquet"), base + 1000)
 
-    def run(tws: Boolean, table: String): Set[(Long, Long, Long, Long)] = {
+    def run(table: String): Set[(Long, Long, Long, Long)] = {
       val src = graft.streaming.DedupStream.documentStream(
         spark, dir.toString, Map("maxFilesPerTrigger" -> "1"))
-      val hits = if (tws) SpanStream.dupHitsTws(src) else SpanStream.dupHits(src)
-      val q = EventStreams.runToMemory(hits.toDF(), table, mode = "append")
+      val q = EventStreams.runToMemory(SpanStream.dupHits(src).toDF(), table,
+        mode = "append")
       try {
         SpanStream.spansOf(spark.table(table)).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -80,15 +80,15 @@ class StreamSpanSpec extends SparkSpec {
       } finally q.stop()
     }
 
-    val got = run(tws = false, "span_hits_fmgws")
+    val got = run("span_hits_fmgws")
     assert(got == expected,
       s"stream vs replay: only-stream=${got.diff(expected).take(3)} " +
         s"only-replay=${expected.diff(got).take(3)} sizes ${got.size}/${expected.size}")
 
     StreamTestIO.withRocksDB(spark) {
-      val gotTws = run(tws = true, "span_hits_tws")
-      assert(gotTws == expected,
-        s"transformWithState span face diverged: sizes ${gotTws.size}/${expected.size}")
+      val gotRocks = run("span_hits_rocksdb")
+      assert(gotRocks == expected,
+        s"RocksDB span face diverged: sizes ${gotRocks.size}/${expected.size}")
     }
   }
 

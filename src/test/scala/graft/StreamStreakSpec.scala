@@ -5,7 +5,8 @@ import graft.streaming.{EventStreams, StreakStream}
 
 /** Streaming streak maintenance vs its batch contract: after replay,
   * each user's last emitted (n_active_days, longest_streak) equals
-  * batch e09 exactly — on both state APIs — and a chunk that only
+  * batch e09 exactly — on the default and RocksDB state stores — and
+  * a chunk that only
   * re-delivers already-seen events emits nothing. */
 class StreamStreakSpec extends SparkSpec {
 
@@ -55,13 +56,13 @@ class StreamStreakSpec extends SparkSpec {
 
     StreamTestIO.withRocksDB(spark) {
       val q2 = EventStreams.runToMemory(
-        StreakStream.streaksTws(
+        StreakStream.streaks(
           EventStreams.stream(spark, dir.toString,
             Map("maxFilesPerTrigger" -> "1"))).toDF(),
-        "streak_stream_tws", mode = "update")
+        "streak_stream_rocksdb", mode = "update")
       try {
-        assert(lastPerUser("streak_stream_tws") == batch,
-          "transformWithState streaks diverged from batch e09")
+        assert(lastPerUser("streak_stream_rocksdb") == batch,
+          "RocksDB streaks diverged from batch e09")
       } finally q2.stop()
     }
   }

@@ -7,9 +7,9 @@ import graft.streaming.{EventStreams, TransitionStream}
   * corpus split into TIME-ordered chunks (so each user's events
   * arrive in (ts) order across micro-batches — the per-key FIFO
   * contract the face documents), aggregate the emitted transition
-  * log, and assert the matrix equals batch e12 bit-for-bit on both
-  * state APIs. Counts and ppm probabilities are exact integers, so
-  * the equality is bit-level. */
+  * log, and assert the matrix equals batch e12 bit-for-bit on the
+  * default and RocksDB state stores. Counts and ppm probabilities
+  * are exact integers, so the equality is bit-level. */
 class StreamTransitionSpec extends SparkSpec {
 
   /** (from, to, n, p_ppm) matrix from the emitted transition log —
@@ -68,12 +68,12 @@ class StreamTransitionSpec extends SparkSpec {
     val dir = stagedDir()
     StreamTestIO.withRocksDB(spark) {
       val q = EventStreams.runToMemory(
-        TransitionStream.transitionsTws(EventStreams.stream(spark, dir,
+        TransitionStream.transitions(EventStreams.stream(spark, dir,
           Map("maxFilesPerTrigger" -> "1"))).toDF(),
-        "trans_stream_tws")
+        "trans_stream_rocksdb")
       try {
-        assert(matrixOf("trans_stream_tws") == batchMatrix(),
-          "stream/batch transition matrices diverge on transformWithState")
+        assert(matrixOf("trans_stream_rocksdb") == batchMatrix(),
+          "stream/batch transition matrices diverge on RocksDB")
       } finally q.stop()
     }
   }

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Streaming windowed trending (e11's live face): after full replay,
   * the final board per day window equals batch e11 exactly — counts
   * are exact integers and the cut shares the batch tie-break, so the
-  * equality is bit-level, on both state APIs, across a micro-batch
+  * equality is bit-level, on the default and RocksDB state stores,
+  * across a micro-batch
   * split that makes every window receive rows from BOTH batches. */
 class StreamTrendingSpec extends SparkSpec {
 
@@ -58,13 +59,13 @@ class StreamTrendingSpec extends SparkSpec {
     val dir = stagedDir()
     StreamTestIO.withRocksDB(spark) {
       val q = EventStreams.runToMemory(
-        TrendingStream.trendingTws(EventStreams.stream(spark, dir,
+        TrendingStream.trending(EventStreams.stream(spark, dir,
           Map("maxFilesPerTrigger" -> "1"))).toDF(),
-        "trend_stream_tws")
+        "trend_stream_rocksdb")
       try {
-        val streamed = lastBoards(spark.table("trend_stream_tws").collect())
+        val streamed = lastBoards(spark.table("trend_stream_rocksdb").collect())
         assert(streamed == batchBoards(),
-          "stream/batch trending diverge on transformWithState")
+          "stream/batch trending diverge on RocksDB")
       } finally q.stop()
     }
   }

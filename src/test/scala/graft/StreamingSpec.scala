@@ -177,10 +177,7 @@ class TransformWithStateSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    StreamTestIO.withRocksDB(spark) {
       val dir = java.nio.file.Files.createTempDirectory("graft-tws")
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$sf/events.parquet"),
@@ -209,9 +206,6 @@ class TransformWithStateSpec extends SparkSpec {
             s"user $uid total $total vs ${want(uid)._2}")
         }
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

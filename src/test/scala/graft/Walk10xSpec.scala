@@ -11,9 +11,10 @@ import graft.operators.{RecallReport, Similarity, Walk10x}
   * extrapolation. Measured at [[Walk10x]]'s 20480-vector isotropic
   * corpus (10.24×, the first extrapolated ×8 band), the r16 formulas
   * FAILED: hit@1 0.556 flat / 0.762 hierarchical (the claimed-held
-  * ef=64), and doubling ef alone only reached 0.768 / 0.838. The
-  * miss anatomy (DiagW10x) showed why: with ef=128 every remaining
-  * flat-beam miss had the beam inside the query's true top-8 while
+  * ef=64), and doubling ef alone only reached 0.768 / 0.838. A
+  * per-miss anatomy of the s20b/s20h misses showed why: with ef=128
+  * every remaining flat-beam miss had the beam inside the query's
+  * true top-8 while
   * the true NN had an undirected edge into almost none of the
   * explored sets (5/190) — kNN asymmetry at 64d leaves the NN
   * UNWIRED from its own neighborhood at fixed degree 8, and no beam
