@@ -1,21 +1,21 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import Model._
 import Sinks._
 
 /** Bulletin pipeline (SURVEY.md §3.2): incremental advisory read →
-  * per-row html enrichment → MERGE against sink state → insert/update
-  * writer paths.
+  * per-row html enrichment → MERGE against sink state → one write pass
+  * that posts new advisories and patches known ones.
   *
   * The reference does 2-3 HTTP round-trips *per advisory* serially
   * (`upload_bulletins`, `src/Datalake2Anomali.py:246-253`); here the
   * probe is one bulk left-outer join against the sink-state table and
-  * writes are partition-parallel. Races of the probe-then-write MERGE
-  * under parallelism are avoided the same way the reference's serial
-  * loop avoids them: each advisory id lands in exactly one task
-  * (`repartition($"id")` before the writers).
+  * the writes fan out over a fixed number of tasks. Races of the
+  * probe-then-write MERGE under parallelism are avoided the same way
+  * the reference's serial loop avoids them: each advisory id lands in
+  * exactly one task (a hash repartition on `id` before the writer).
   */
 object Bulletins {
 
@@ -76,46 +76,54 @@ object Bulletins {
   /** K2 — insert-path tipreport JSON (`AnomaliTipReportModel`,
     * `src/models.py:16-19`: body/created/modified/name/tags plus the
     * model's constant defaults). */
-  def insertPayloads(advisories: DataFrame): DataFrame =
-    advisories.filter(col("tip_id").isNull).select(
-      col("id"),
-      to_json(struct(
-        col("html").as("body"),
-        lit("markdown").as("body_content_type"),
-        col("timestamp_updated").as("modified_ts"),
-        col("title").as("name"),
-        lit("WorldWatch").as("original_source"),
-        lit("WorldWatch").as("source"),
-        col("timestamp_created").as("created_ts"),
-        insertTags.as("tags"))).as("payload"))
+  private def insertPayload = to_json(struct(
+    col("html").as("body"),
+    lit("markdown").as("body_content_type"),
+    col("timestamp_updated").as("modified_ts"),
+    col("title").as("name"),
+    lit("WorldWatch").as("original_source"),
+    lit("WorldWatch").as("source"),
+    col("timestamp_created").as("created_ts"),
+    insertTags.as("tags")))
 
   /** K3 — update-path tipreport JSON (`PatchTipReportModel`,
     * `src/models.py:13-14`: tags_v2 as {name} structs, modified_ts
     * reformatted to `%Y-%m-%dT%H:%M:%S.%f%z`, :201-204). */
-  def patchPayloads(advisories: DataFrame): DataFrame =
-    advisories.filter(col("tip_id").isNotNull).select(
-      col("id"), col("tip_id"),
-      to_json(struct(
-        col("html").as("body"),
-        lit("markdown").as("body_content_type"),
-        date_format(to_timestamp(col("timestamp_updated")), ANOMALI_TIME_FORMAT)
-          .as("modified_ts"),
-        col("title").as("name"),
-        lit("WorldWatch").as("original_source"),
-        lit("WorldWatch").as("source"),
-        transform(patchTags, t => struct(t.as("name"))).as("tags_v2"))).as("payload"))
+  private def patchPayload = to_json(struct(
+    col("html").as("body"),
+    lit("markdown").as("body_content_type"),
+    date_format(to_timestamp(col("timestamp_updated")), ANOMALI_TIME_FORMAT)
+      .as("modified_ts"),
+    col("title").as("name"),
+    lit("WorldWatch").as("original_source"),
+    lit("WorldWatch").as("source"),
+    transform(patchTags, t => struct(t.as("name"))).as("tags_v2")))
 
-  /** Full MERGE write: split on probe result, repartition by advisory
-    * id (one id → one task), write both paths via the sink trait.
-    * Returns (accepted, failed) write counts — mirroring
-    * [[Sinks.writeIntel]]: the reference logs post failures and raises
-    * on patch failures (`src/Datalake2Anomali.py:213-216,240-243`);
-    * here every non-Accepted result is counted and logged, never
-    * silently dropped. */
+  /** The MERGE as write-ready rows `(id, tip_id, payload)`: the probe
+    * result picks each row's payload (insert JSON when `tip_id` is null,
+    * patch JSON otherwise), and a hash repartition on `id` with an
+    * explicit width — `defaultParallelism` — fans the rows out. AQE
+    * never coalesces an exchange of explicit width, and one id still
+    * lands in exactly one task. */
+  def mergePayloads(advisories: DataFrame, sinkState: DataFrame): DataFrame =
+    mergeSplit(advisories, sinkState)
+      .select(col("id"), col("tip_id"),
+        when(col("tip_id").isNull, insertPayload).otherwise(patchPayload)
+          .as("payload"))
+      .repartition(advisories.sparkSession.sparkContext.defaultParallelism,
+        col("id"))
+
+  /** Full MERGE write in one pass: [[mergePayloads]], then one
+    * `foreachPartition` that posts each insert row and patches each
+    * update row via the sink trait. Returns (accepted, failed) write
+    * counts — mirroring [[Sinks.writeIntel]]: the reference logs post
+    * failures and raises on patch failures
+    * (`src/Datalake2Anomali.py:213-216,240-243`); here every
+    * non-Accepted result is counted and logged, never silently
+    * dropped. */
   def write(advisories: DataFrame, sinkState: DataFrame,
       sink: TipReportSink): (Long, Long) = {
-    val merged = mergeSplit(advisories, sinkState).cache()
-    val sc = merged.sparkSession.sparkContext
+    val sc = advisories.sparkSession.sparkContext
     val accepted = sc.longAccumulator("tipreport_accepted")
     val failed = sc.longAccumulator("tipreport_failed")
     def count(r: Sinks.UploadResult, what: String): Unit = r match {
@@ -124,18 +132,14 @@ object Bulletins {
         failed.add(1)
         System.err.println(s"[graft.sink] tipreport $what failed: $other")
     }
-    try {
-      insertPayloads(merged).repartition(col("id"))
-        .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-          rows.foreach(r => count(sink.post(r.getAs[String]("payload")), "post"))
+    mergePayloads(advisories, sinkState)
+      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+        rows.foreach { r =>
+          val payload = r.getString(2)
+          if (r.isNullAt(1)) count(sink.post(payload), "post")
+          else count(sink.patch(r.getLong(1), payload), "patch")
         }
-      patchPayloads(merged).repartition(col("id"))
-        .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-          rows.foreach(r => count(
-            sink.patch(r.getAs[Long]("tip_id"), r.getAs[String]("payload")),
-            "patch"))
-        }
-    } finally merged.unpersist()
+      }
     (accepted.value, failed.value)
   }
 }

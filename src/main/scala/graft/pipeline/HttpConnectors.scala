@@ -195,15 +195,21 @@ object HttpConnectors {
       updatedAfter: Option[String] = None,
       statePageSize: Int = 1000) extends Runner.Sources {
 
-    override def iocRows(spark: SparkSession): DataFrame =
+    /** F1 runs before the fetch, as in the reference (`:311-313`): only
+      * valid descriptors get a bulk-search request. The filter is over
+      * a local relation, so collecting it runs no Spark job. */
+    override def iocRows(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      val valid = IocTransform.validQueries(queryConfig(spark))
+        .select("query_hash").as[String].collect()
       spark.read.format("graft-ioc")
         .option("transport", "http")
         .option("url", datalake.baseUrl)
         .option("token", datalake.token)
         .option("tlsVerify", datalake.http.tlsVerify.toString)
-        .option("queries",
-          cfg.datalakeQueries.map(_.query_hash).mkString(","))
+        .option("queries", valid.mkString(","))
         .load()
+    }
 
     override def queryConfig(spark: SparkSession): DataFrame = {
       import spark.implicits._

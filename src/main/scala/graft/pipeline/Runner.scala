@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{ExecutionException, FutureTask}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import Model._
 import Sinks._
@@ -10,7 +12,10 @@ import Sinks._
   * `src/Datalake2Anomali.py:442-449`; we isolate both but preserve the
   * exit policy). Each cycle is a fresh idempotent batch — the
   * reference re-pulls everything and relies on sink upsert (T1), and
-  * so do we. A Structured-Streaming variant of the cadence lives in
+  * so do we. The two pipelines share nothing but the session, so a
+  * cycle overlaps them: the IOC pipeline runs on a thread of its own
+  * while the bulletin pipeline runs on the caller's. A
+  * Structured-Streaming variant of the cadence lives in
   * `graft.streaming` (Trigger.ProcessingTime ≙ `schedule.every(h)`).
   */
 object Runner {
@@ -35,22 +40,31 @@ object Runner {
       iocWrites: (Long, Long) = (0L, 0L),
       bulletinWrites: (Long, Long) = (0L, 0L))
 
-  /** One batch cycle (both pipelines). */
+  /** One batch cycle: the IOC pipeline on a fresh thread, overlapped
+    * with the bulletin pipeline on the calling thread, joined before the
+    * report is built. A fresh thread per cycle (not a pool) inherits
+    * this caller's Spark local properties. An `Exception` from either
+    * side is that pipeline's error in the report; any other throwable
+    * still propagates out of `runOnce`, after both sides have ended. */
   def runOnce(spark: SparkSession, src: Sources, cfg: PipelineConfig,
       intelSink: IntelSink, tipSink: TipReportSink,
       nowUtc: java.time.Instant = java.time.Instant.now()): RunReport = {
     // pin timestamp parsing/formatting to UTC: cursor comparison and
     // modified_ts rendering are wrong in any other session time zone
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val ioc =
-      try {
-        val objs = IocTransform.run(
-          src.iocRows(spark), src.queryConfig(spark), cfg)
-        Right(writeIntel(objs, intelSink, IocTransform.metaJson(cfg, nowUtc),
-          cfg.maxPayloadBytes))
-      } catch { case e: Exception => Left(e.toString) }
+    def isolated(body: => (Long, Long)): Either[String, (Long, Long)] =
+      try Right(body) catch { case e: Exception => Left(e.toString) }
+    val iocTask = new FutureTask[Either[String, (Long, Long)]](() => isolated {
+      val objs = IocTransform.run(
+        src.iocRows(spark), src.queryConfig(spark), cfg)
+      writeIntel(objs, intelSink, IocTransform.metaJson(cfg, nowUtc),
+        cfg.maxPayloadBytes)
+    })
+    val iocThread = new Thread(iocTask, "graft-runner-ioc")
+    iocThread.setDaemon(true)
+    iocThread.start()
     val bul =
-      try {
+      try isolated {
         val state = src.tipReportState(spark)
         val cur = Bulletins.cursor(cfg, state, nowUtc)
         import org.apache.spark.sql.functions._
@@ -61,8 +75,11 @@ object Runner {
           to_timestamp(col("timestamp_updated")) >
             lit(java.sql.Timestamp.from(cur)))
         val enriched = Bulletins.enrich(fresh, src.htmlFetcher)
-        Right(Bulletins.write(enriched.toDF(), state, tipSink))
-      } catch { case e: Exception => Left(e.toString) }
+        Bulletins.write(enriched.toDF(), state, tipSink)
+      } finally iocThread.join()
+    val ioc =
+      try iocTask.get()
+      catch { case e: ExecutionException => throw e.getCause }
     RunReport(ioc.isRight, bul.isRight, ioc.left.toOption, bul.left.toOption,
       ioc.getOrElse((0L, 0L)), bul.getOrElse((0L, 0L)))
   }

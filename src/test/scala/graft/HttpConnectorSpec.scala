@@ -283,12 +283,17 @@ class HttpConnectorSpec extends SparkSpec {
 
   test("runOnce end-to-end with every seam over HTTP") {
     withStub { stub =>
+      // qh_nods has no dataset name: F1 drops it before any fetch
       val cfg = PipelineConfig(datalakeQueries = Seq(
-        QueryDescriptor("qh1", "ds1", "high")))
+        QueryDescriptor("qh1", "ds1", "high"),
+        QueryDescriptor("qh_nods", "", "high")))
       stub.bulkDocs = Map("qh1" ->
         """{"count":2,"advanced_query_hash":"qh1","results":[
           ["domain","evil.com","m1",[70,80],["t1"]],
-          ["domain","bad.org",null,[65],[]]]}""")
+          ["domain","bad.org",null,[65],[]]]}""",
+        "qh_nods" ->
+        """{"count":1,"advanced_query_hash":"qh_nods","results":[
+          ["domain","dropped.net",null,[50],[]]]}""")
       stub.advisoriesJson =
         """{"items":[
           {"id":1,"title":"Old advisory","tags":["a"],
@@ -308,6 +313,11 @@ class HttpConnectorSpec extends SparkSpec {
       // intelligence: both domains uploaded
       val intel = stub.intelPayloads.asScala.mkString
       assert(intel.contains("evil.com") && intel.contains("bad.org"))
+      // bulk search: one request for qh1, none for the invalid descriptor
+      val bulk = stub.iocRequests.asScala.toList
+      assert(bulk.count(_.startsWith("/bulk/qh1?")) == 1, bulk.toString)
+      assert(!bulk.exists(_.startsWith("/bulk/qh_nods")), bulk.toString)
+      assert(!intel.contains("dropped.net"))
       // bulletins: advisory 1 exists in state → PATCH tip 10; advisory 2 → POST
       assert(stub.tipPatches.asScala.map(_._1).toList == List(10L))
       assert(stub.tipPosts.asScala.toList.exists(_.contains("New advisory")))

@@ -161,39 +161,130 @@ class PipelineSpec extends SparkSpec {
     assert(Bulletins.cursor(cfg, empty, now) == java.time.Instant.EPOCH)
   }
 
-  test("runOnce end-to-end with error isolation") {
+  /** Fixture sources whose IOC rows and advisories come from the given
+    * by-name reads, so a test can make one pipeline's source throw. */
+  private def sourcesWith(rows: => DataFrame,
+      advs: => Dataset[Advisory]): Runner.Sources = {
     val s = spark
     import s.implicits._
-    val (rows, queries) = fixtures
-    val src = new Runner.Sources {
+    val (_, queries) = fixtures
+    new Runner.Sources {
       def iocRows(sp: SparkSession) = rows
       def queryConfig(sp: SparkSession) = queries
-      def advisories(sp: SparkSession) = Seq(
-        Advisory(7L, "T", Seq(), "2026-01-01T00:00:00", "2026-01-02T00:00:00", "")).toDS()
+      def advisories(sp: SparkSession) = advs
       def tipReportState(sp: SparkSession) =
         spark.emptyDataset[TipReportState].toDF()
       def htmlFetcher = new Bulletins.HtmlFetcher {
         def fetch(id: Long) = s"<p>$id</p>"
       }
     }
+  }
+
+  private def oneAdvisory: Dataset[Advisory] = {
+    val s = spark
+    import s.implicits._
+    Seq(Advisory(7L, "T", Seq(), "2026-01-01T00:00:00",
+      "2026-01-02T00:00:00", "")).toDS()
+  }
+
+  test("runOnce end-to-end with error isolation") {
+    val (rows, _) = fixtures
     val intel = new RecordingIntelSink(maxAccepted = Int.MaxValue)
     val tips = new RecordingTipSink
-    val report = Runner.runOnce(spark, src, cfg, intel, tips)
+    val report = Runner.runOnce(spark, sourcesWith(rows, oneAdvisory), cfg,
+      intel, tips)
     assert(report.iocOk && report.bulletinsOk, report.toString)
     assert(intel.accepted.nonEmpty)
     assert(tips.posts.size == 1 && tips.patches.isEmpty)
     // poison source: bulletin failure must not fail the ioc pipeline
-    val poison = new Runner.Sources {
-      def iocRows(sp: SparkSession) = rows
-      def queryConfig(sp: SparkSession) = queries
-      def advisories(sp: SparkSession) = throw new RuntimeException("boom")
-      def tipReportState(sp: SparkSession) =
-        spark.emptyDataset[TipReportState].toDF()
-      def htmlFetcher = src.htmlFetcher
-    }
+    val poison = sourcesWith(rows, throw new RuntimeException("boom"))
     val r2 = Runner.runOnce(spark, poison, cfg, intel, tips)
     assert(r2.iocOk && !r2.bulletinsOk)
     assert(r2.bulletinError.exists(_.contains("boom")))
+  }
+
+  test("runOnce: an IOC failure does not fail the overlapped bulletin pipeline") {
+    val tips = new RecordingTipSink
+    val r = Runner.runOnce(spark,
+      sourcesWith(throw new RuntimeException("ioc boom"), oneAdvisory), cfg,
+      new RecordingIntelSink(maxAccepted = Int.MaxValue), tips)
+    assert(!r.iocOk && r.bulletinsOk, r.toString)
+    assert(r.iocError.exists(_.contains("ioc boom")), r.toString)
+    assert(r.bulletinWrites == ((1L, 0L)))
+    assert(tips.posts.size == 1 && tips.patches.isEmpty)
+  }
+
+  test("runOnce rethrows an Error raised on the IOC thread") {
+    val fatal = new Error("ioc fatal")
+    val tips = new RecordingTipSink
+    val e = intercept[Error](Runner.runOnce(spark,
+      sourcesWith(throw fatal, oneAdvisory), cfg,
+      new RecordingIntelSink(maxAccepted = Int.MaxValue), tips))
+    assert(e eq fatal)
+    // the bulletin side ran to its end before the Error came out
+    assert(tips.posts.size == 1)
+  }
+
+  test("bulletin MERGE writes in one execution over defaultParallelism write tasks") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val s = spark
+    import s.implicits._
+    val width = spark.sparkContext.defaultParallelism
+    val n = 8 * width
+    val advisories = (1 to n).map(i => Advisory(i.toLong, s"A$i", Seq("t"),
+      "2026-01-01T00:00:00", "2026-01-02T00:00:00", s"<p>$i</p>")).toDF()
+    // even ids already have a tipreport (patch path), odd ids are new
+    val state = (2 to n by 2).map(i =>
+      TipReportState(i.toLong, 1000L + i, "2026-01-01T00:00:00")).toDF()
+    val execs = new ConcurrentLinkedQueue[QueryExecution]()
+    val stages = new ConcurrentLinkedQueue[StageInfo]()
+    val qel = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = execs.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = execs.add(qe)
+    }
+    val sl = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo)
+    }
+    val sink = new RecordingTipSink
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(sl)
+    val (ok, bad) =
+      try Bulletins.write(advisories, state, sink)
+      finally {
+        org.apache.spark.graftbus.Bus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(qel)
+        spark.sparkContext.removeSparkListener(sl)
+      }
+    assert(ok == n.toLong && bad == 0L)
+    val nExecs = execs.size
+    assert(nExecs == 1, s"$nExecs SQL executions, expected one")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plan = nodes(execs.peek().executedPlan)
+    assert(!plan.exists(_.isInstanceOf[InMemoryTableScanExec]), "write reads a cache")
+    val fanOut = plan.collect {
+      case e: ShuffleExchangeLike if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }
+    assert(fanOut.map(_.numPartitions) == Seq(width))
+    // the write stage is the job's result stage, the last one created
+    val writeStage = stages.asScala.maxBy(_.stageId)
+    assert(writeStage.numTasks == width,
+      s"write stage ran ${writeStage.numTasks} tasks, expected $width")
+    val posted = sink.posts.map(p =>
+      """"world_watch_(\d+)"""".r.findFirstMatchIn(p).get.group(1).toInt)
+    assert(posted.sorted == (1 to n by 2).toList)
+    assert(sink.patches.map(_._1).sorted == (2 to n by 2).map(1000L + _).toList)
   }
 }
 

@@ -51,7 +51,7 @@ class StreamGuardSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streamed conversions equal batch e13 exactly (transformWithState, RocksDB)") {
+  test("streamed conversions equal batch e13 exactly (fmgws, RocksDB)") {
     val dir = stagedDir()
     StreamTestIO.withRocksDB(spark) {
       val q = EventStreams.runToMemory(

@@ -61,7 +61,7 @@ class StreamPatternSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streamed pattern counts equal batch e15 exactly (transformWithState, RocksDB)") {
+  test("streamed pattern counts equal batch e15 exactly (fmgws, RocksDB)") {
     val dir = stagedDir()
     StreamTestIO.withRocksDB(spark) {
       val q = EventStreams.runToMemory(

@@ -64,7 +64,7 @@ class StreamTransitionSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streamed transition matrix equals batch e12 exactly (transformWithState)") {
+  test("streamed transition matrix equals batch e12 exactly (fmgws, RocksDB)") {
     val dir = stagedDir()
     StreamTestIO.withRocksDB(spark) {
       val q = EventStreams.runToMemory(
