@@ -1,16 +1,12 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
-/** Dev tool: dump formatted plans for the headline queries.
-  * Prefix a query name with `exec:` to RUN it and dump the final
-  * AQE-executed plan instead (shows ReusedExchange/ReusedSubquery
-  * nodes the static plan can't — the t18 scan-count discipline).
-  * The single argument `windows` sweeps EVERY registered query for
-  * single-partition Window execs (the e16 class of scale-killer —
-  * see [[globalWindows]]). */
+/** Plan checks for PlanAuditSpec. Executed plans of a query
+  * (with their ReusedExchange/ReusedSubquery nodes, the t18
+  * scan-count discipline) are written by `graft.Probe`'s plans file. */
 object PlanAudit {
 
   /** Single-partition Window/WindowGroupLimit nodes in the query's
@@ -18,8 +14,8 @@ object PlanAudit {
     * AllTuples — the whole input sorts through ONE task, the classic
     * global-window scale cliff (fine on a vocabulary-sized frame,
     * fatal on a data-sized one). Walks through the AQE wrapper and
-    * plan subqueries. Shared by the `windows` sweep and
-    * PlanAuditSpec's engine-wide negative. */
+    * plan subqueries. PlanAuditSpec sweeps every registered query
+    * with it (the e16 class of scale-killer). */
   def globalWindows(df: DataFrame): Seq[String] = {
     def walk(p: SparkPlan): Seq[String] = {
       val self = p match {
@@ -37,39 +33,5 @@ object PlanAudit {
       self ++ (kids ++ p.subqueries).flatMap(walk)
     }
     walk(df.queryExecution.executedPlan)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sf = "/root/testdata/sf0.01"
-    for (q <- args) {
-      if (q == "windows") {
-        val small = "/root/testdata/sf0.001"
-        SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-          val hits =
-            try globalWindows(fn(spark, small))
-            catch { case e: Throwable => Seq(s"BUILD FAILED: $e") }
-          if (hits.nonEmpty)
-            println(s"[windows] $name: ${hits.mkString(" | ")}")
-        }
-        println("[windows] sweep done")
-      } else if (q.startsWith("exec:")) {
-        println(s"========== $q ==========")
-        val df = SparkEntry.queries(q.stripPrefix("exec:"))(spark, sf)
-        df.collect(): Unit
-        val ex = df.queryExecution.executedPlan.toString
-        val scans = "Scan parquet".r.findAllIn(ex).length
-        val reused = "ReusedExchange".r.findAllIn(ex).length
-        println(ex)
-        println(s"[planaudit] scans=$scans reused_exchanges=$reused")
-      } else {
-        println(s"========== $q ==========")
-        SparkEntry.queries(q)(spark, sf).explain("formatted")
-      }
-    }
-    spark.stop()
   }
 }

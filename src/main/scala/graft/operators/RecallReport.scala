@@ -319,13 +319,7 @@ object RecallReport {
     val sections = args.drop(1).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(DEFAULT_SECTIONS)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-recall")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     try {
       val m = compute(spark, dir, sections)
       println(s"| metric | $dir |")

@@ -259,8 +259,9 @@ object Relational16 {
     * which are `localCheckpoint`ed (the t39 convention — the three
     * consumers project different column sets, so ReusedExchange can
     * never unify them and the un-checkpointed plan re-tokenizes the
-    * corpus three times; measured via `PlanAudit exec:` before the
-    * fix: 3 scans, 0 reused exchanges). The target and raw bucket
+    * corpus three times; the executed plan before the fix, as
+    * `graft.Probe`'s plans file shows it: 3 scans, 0 reused
+    * exchanges). The target and raw bucket
     * tables derive from THAT frame, collapse to ≤ 256 rows, and
     * come back as a broadcast — so the corpus is scanned once, and
     * the weight join adds zero data-sized shuffles beyond the

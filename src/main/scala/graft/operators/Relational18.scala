@@ -329,7 +329,7 @@ object Relational18 {
     // aggregate over ONE window pass — the naive two-groupBy form
     // re-evaluated the user window per model (two user_id exchanges,
     // no ReusedExchange across the differing aliases; caught by
-    // `PlanAudit exec:`, the t43 lesson)
+    // `graft.Probe`'s plans file, the t43 lesson)
     t(s, dir, "events")
       .select($"user_id", $"event_id", $"event_type", $"value",
         unix_micros($"ts").as("tsus"))

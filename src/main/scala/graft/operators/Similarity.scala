@@ -980,7 +980,7 @@ object Similarity {
     // own dompr self-join shape instead of the r16 collect_list +
     // exists() higher-order function — HOF lambdas evaluate
     // interpreted per element, and the C² per-node pairwise cosines
-    // measured ~25 task-seconds per fresh build at sf0.1 (ProbeJobs:
+    // measured ~25 task-seconds per fresh build at sf0.1 (graft.Probe:
     // s20 task_run 27.8 s/rep, s20m 2.2 — the gap IS this selection).
     // As a join, the pairwise [[vec_dot]] runs inside whole-stage
     // codegen; the three `pool` references share one exchange

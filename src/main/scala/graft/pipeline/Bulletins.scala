@@ -47,14 +47,13 @@ object Bulletins {
       else row.getTimestamp(0).toInstant
     }
 
-  /** S5 enrichment as a distributed map (adds `html`). */
+  /** S5 enrichment as a distributed map (adds `html`). The HTTP
+    * fetcher reuses [[Http]]'s one client per JVM and conf, so tasks
+    * share pooled connections without per-partition set-up. */
   def enrich(advisories: Dataset[Advisory], fetcher: HtmlFetcher)
       : Dataset[Advisory] = {
     import advisories.sparkSession.implicits._
-    advisories.mapPartitions { it =>
-      // per-partition client init would go here (connection reuse)
-      it.map(a => a.copy(html = fetcher.fetch(a.id)))
-    }
+    advisories.mapPartitions(_.map(a => a.copy(html = fetcher.fetch(a.id))))
   }
 
   /** J5 — the MERGE probe as one bulk left-outer join: returns the

@@ -20,8 +20,7 @@ import javax.net.ssl.{SSLContext, SSLEngine, TrustManager, X509ExtendedTrustMana
   * (`foreachPartition`/`mapPartitions`), and `java.net.http.HttpClient`
   * is not serializable — clients live in a JVM-static cache keyed by
   * conf, built lazily on first use per executor and reused across
-  * tasks (connection pooling, the "one client per partition" note in
-  * [[Bulletins.enrich]]).
+  * tasks (connection pooling for [[Bulletins.enrich]]'s html fan-out).
   */
 object Http {
 
@@ -44,6 +43,22 @@ object Http {
       proxyPort: Int = 3128,
       retries: Int = 2,
       retryBackoffMs: Long = 200L)
+
+  object Conf {
+    /** One-string form of a Conf for a boundary that carries only
+      * strings (the `graft-ioc` source's `http` option): the fields in
+      * declaration order, `;`-joined. `decode(encode(c)) == c`. */
+    def encode(c: Conf): String = Seq(c.connectTimeoutMs, c.requestTimeoutMs,
+      c.tlsVerify, c.proxyHost.getOrElse(""), c.proxyPort, c.retries,
+      c.retryBackoffMs).mkString(";")
+
+    def decode(s: String): Conf = s.split(";", -1) match {
+      case Array(ct, rt, tls, host, port, retries, backoff) =>
+        Conf(ct.toLong, rt.toLong, tls.toBoolean, Option(host).filter(_.nonEmpty),
+          port.toInt, retries.toInt, backoff.toLong)
+      case _ => throw new IllegalArgumentException(s"not an encoded Http.Conf: $s")
+    }
+  }
 
   final case class Response(code: Int, body: String)
 

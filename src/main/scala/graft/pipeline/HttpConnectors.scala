@@ -197,7 +197,10 @@ object HttpConnectors {
 
     /** F1 runs before the fetch, as in the reference (`:311-313`): only
       * valid descriptors get a bulk-search request. The filter is over
-      * a local relation, so collecting it runs no Spark job. */
+      * a local relation, so collecting it runs no Spark job. The
+      * endpoint's whole [[Http.Conf]] (proxy, timeouts, retries, TLS)
+      * crosses the source's option boundary, so the executor-side
+      * fetches use the same transport as every other endpoint. */
     override def iocRows(spark: SparkSession): DataFrame = {
       import spark.implicits._
       val valid = IocTransform.validQueries(queryConfig(spark))
@@ -206,7 +209,7 @@ object HttpConnectors {
         .option("transport", "http")
         .option("url", datalake.baseUrl)
         .option("token", datalake.token)
-        .option("tlsVerify", datalake.http.tlsVerify.toString)
+        .option("http", Http.Conf.encode(datalake.http))
         .option("queries", valid.mkString(","))
         .load()
     }

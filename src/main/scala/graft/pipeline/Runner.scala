@@ -20,9 +20,9 @@ import Sinks._
   */
 object Runner {
 
-  /** Source boundary: everything the pipelines read. Local/file
-    * implementations in tests; HTTP implementations would construct
-    * their DataFrames via the same contract. */
+  /** Source boundary: everything the pipelines read.
+    * [[HttpConnectors.HttpSources]] reads the real endpoints; tests use
+    * local/file implementations of the same contract. */
   trait Sources {
     def iocRows(spark: SparkSession): DataFrame          // S1 (decoded)
     def queryConfig(spark: SparkSession): DataFrame      // S6

@@ -22,17 +22,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Column pruning ([[SupportsPushDownRequiredColumns]]) mirrors the
   * reference's `query_fields` projection (P1): the reader materializes
-  * only the requested columns — a real HTTP implementation would put
-  * the pruned list straight into the BulkSearch `query_fields`
-  * parameter.
+  * only the requested columns, and the http transport puts the pruned
+  * list straight into the BulkSearch `query_fields` parameter.
   *
-  * Transport is pluggable behind [[IocBulkSource.Fetcher]]; the
-  * shipped implementation reads `{path}/{query_hash}.json` files
-  * shaped exactly like the API response (FIXTURES.md §1):
-  * `{"count": n, "advanced_query_hash": h, "results": [[atom_type,
-  * atom_value, hashes_md5, scores[], tags[]?], ...]}`.
+  * Transport is pluggable behind [[IocBulkSource.Fetcher]]:
+  * `transport=http` is [[graft.pipeline.HttpConnectors.HttpIocFetcher]]
+  * (what [[graft.pipeline.HttpConnectors.HttpSources]] reads through),
+  * and the default file transport, used by the tests, reads
+  * `{path}/{query_hash}.json` files shaped exactly like the API
+  * response (FIXTURES.md §1): `{"count": n, "advanced_query_hash": h,
+  * "results": [[atom_type, atom_value, hashes_md5, scores[], tags[]?],
+  * ...]}`.
   *
-  * Usage:
+  * Usage (file transport):
   * {{{
   * spark.read.format("graft-ioc")
   *   .option("path", fixtureDir)
@@ -144,9 +146,11 @@ private class IocScan(options: CaseInsensitiveStringMap,
       .map(qh => IocInputPartition(qh): InputPartition)
   /** Transport selection: `transport=file` (default) reads
     * `{path}/{query_hash}.json`; `transport=http` GETs
-    * `{url}/{query_hash}` with the PRUNED column list serialized into
-    * the request's `query_fields` parameter — P1's pushdown reaching
-    * the wire, exactly where the reference puts its projection
+    * `{url}/{query_hash}` under the endpoint's whole transport conf
+    * (the `http` option, [[graft.pipeline.Http.Conf.encode]]) with the
+    * PRUNED column list serialized into the request's `query_fields`
+    * parameter — P1's pushdown reaching the wire, exactly where the
+    * reference puts its projection
     * (`src/Datalake2Anomali.py:297-300,318-320`). */
   override def createReaderFactory(): PartitionReaderFactory = {
     val fetcher: IocBulkSource.Fetcher =
@@ -157,8 +161,8 @@ private class IocScan(options: CaseInsensitiveStringMap,
           graft.pipeline.HttpConnectors.HttpIocFetcher(
             graft.pipeline.HttpConnectors.DatalakeEndpoint(
               options.get("url"), options.getOrDefault("token", ""),
-              graft.pipeline.Http.Conf(tlsVerify =
-                options.getOrDefault("tlsVerify", "true").toBoolean)),
+              Option(options.get("http")).fold(graft.pipeline.Http.Conf())(
+                graft.pipeline.Http.Conf.decode)),
             // prune to requested columns; never request nothing (a
             // count(*) scan still needs rows back)
             if (wireFields.nonEmpty) wireFields else Seq("atom_type"))

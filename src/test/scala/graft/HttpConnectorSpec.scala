@@ -459,4 +459,29 @@ class HttpConnectorSpec extends SparkSpec {
       assert(r.code == 200 && r.body.contains("ok"))
     }
   }
+
+  test("iocRows: the bulk-search fetch runs under the Datalake endpoint's whole conf") {
+    withStub { stub =>
+      stub.bulkDocs = Map("qh1" ->
+        """{"count":2,"advanced_query_hash":"qh1","results":[
+          ["domain","evil.com","m1",[70,80],["t1"]],
+          ["url","http://bad","m2",[55],[]]]}""")
+      // unresolvable host: the executor-side fetch succeeds only if the
+      // endpoint's proxy crossed the source's option boundary
+      val conf = Http.Conf(proxyHost = Some("127.0.0.1"),
+        proxyPort = stub.server.getAddress.getPort,
+        requestTimeoutMs = 20000L, retries = 0)
+      assert(Http.Conf.decode(Http.Conf.encode(conf)) == conf)
+      val proxied = DatalakeEndpoint("http://graft-proxied.invalid/bulk", "tok", conf)
+      val cfg = PipelineConfig(datalakeQueries =
+        Seq(QueryDescriptor("qh1", "ds1", "high")))
+      val src = HttpSources(ww(stub), anomali(stub), proxied, cfg)
+      val vals = src.iocRows(spark).select("atom_value")
+        .as[String](org.apache.spark.sql.Encoders.STRING).collect().sorted
+      assert(vals.toSeq == Seq("evil.com", "http://bad"))
+      assert(stub.iocRequests.asScala.exists(
+        _.startsWith("http://graft-proxied.invalid/bulk/qh1?")),
+        stub.iocRequests.toString)
+    }
+  }
 }

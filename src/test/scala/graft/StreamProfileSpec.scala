@@ -96,7 +96,7 @@ class StreamProfileSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streamed profile equals batch q72 pass-1 (transformWithState)") {
+  test("streamed profile equals batch q72 pass-1 (fmgws, RocksDB)") {
     val dir = chunkedDir("prof-rocksdb", Tables.load(spark, sf, "orders"),
       "o_orderkey")
     StreamTestIO.withRocksDB(spark) {

@@ -43,7 +43,7 @@ class StreamSpanSpec extends SparkSpec {
       }.toSet
   }
 
-  test("streaming span hits match the prefix-visibility replay on both state APIs") {
+  test("streaming span hits match the prefix-visibility replay (default and RocksDB stores)") {
     val s = spark
     import s.implicits._
     val docs = Tables.load(spark, sf, "documents")

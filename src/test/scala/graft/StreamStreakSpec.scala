@@ -18,7 +18,7 @@ class StreamStreakSpec extends SparkSpec {
       // final emission regardless of memory-sink row order
       .map { case (u, rows) => u -> rows.map(_._2).maxBy(_._1) }
 
-  test("streaming streaks equal batch e09 after replay (both state APIs)") {
+  test("streaming streaks equal batch e09 after replay (default and RocksDB stores)") {
     val s = spark
     import s.implicits._
     // normalized loader frame + numeric micros split key (ts is

@@ -55,7 +55,7 @@ class StreamTrendingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming trending final board equals batch e11 exactly (transformWithState)") {
+  test("streaming trending final board equals batch e11 exactly (fmgws, RocksDB)") {
     val dir = stagedDir()
     StreamTestIO.withRocksDB(spark) {
       val q = EventStreams.runToMemory(

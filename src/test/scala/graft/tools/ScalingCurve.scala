@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures representative queries across the three generated scale
   * factors and prints the markdown table SCALING.md embeds ("Measured
   * scaling curve"). Sub-linear growth ⇒ fixed overhead still
   * dominates at that SF; ~linear growth ⇒ the operator is data-bound
   * and its shuffle structure is what matters at 100 TB.
-  * `Test/runMain graft.tools.ScalingCurve` */
+  * `Test/runMain graft.tools.ScalingCurve` (on `SPARK_GRAFT_CPUS` cores,
+  * default all of the host's). */
 object ScalingCurve {
   private val SFS = Seq("sf0.001", "sf0.01", "sf0.1")
   private val QUERIES = Seq(
@@ -28,10 +27,7 @@ object ScalingCurve {
     "q74_ivm_join", "s19_khop_reachability")       // delta joins / frontier BFS
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     // warm every SF's tables and the text kernels once
     SFS.foreach { sf =>
