@@ -16,14 +16,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q04(spark, "/root/testdata/sf0.001")
 
+  /** Every operator module, in registration order (a later module's
+    * entry would replace an earlier one of the same name;
+    * LlmOpsSpec checks that no name repeats). */
+  private[graft] def modules: Seq[QueryModule] = Seq(
+    Relational, TextAnalysis, Dedup, Similarity, Multimodal, EventWindows,
+    Relational2, AsOfJoin, Relational3, Curation, Relational4,
+    Relational5, Relational6, Relational7, Relational8, Relational9,
+    Relational10, Relational11, Relational12, Relational13, Relational14,
+    Relational15, Relational16, Relational17, Relational18, Relational19,
+    Relational20, Relational21, Relational22, Relational23, Relational24,
+    Relational25, Fuzz)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ TextAnalysis.queries ++ Dedup.queries ++
-      Similarity.queries ++ Multimodal.queries ++ EventWindows.queries ++ Relational2.queries ++ AsOfJoin.queries ++ Relational3.queries ++ Curation.queries ++ Relational4.queries ++ Relational5.queries ++ Relational6.queries ++ Relational7.queries ++ Relational8.queries ++ Relational9.queries ++ Relational10.queries ++ Relational11.queries ++ Relational12.queries ++ Relational13.queries ++ Relational14.queries ++ Relational15.queries ++ Relational16.queries ++ Relational17.queries ++ Relational18.queries ++ Relational19.queries ++ Relational20.queries ++ Relational21.queries ++ Relational22.queries ++ Relational23.queries ++ Relational24.queries ++ Relational25.queries ++ Fuzz.queries
+    modules.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ TextAnalysis.oracles ++ Dedup.oracles ++
-      Similarity.oracles ++ Multimodal.oracles ++ EventWindows.oracles ++ Relational2.oracles ++ AsOfJoin.oracles ++ Relational3.oracles ++ Curation.oracles ++ Relational4.oracles ++ Relational5.oracles ++ Relational6.oracles ++ Relational7.oracles ++ Relational8.oracles ++ Relational9.oracles ++ Relational10.oracles ++ Relational11.oracles ++ Relational12.oracles ++ Relational13.oracles ++ Relational14.oracles ++ Relational15.oracles ++ Relational16.oracles ++ Relational17.oracles ++ Relational18.oracles ++ Relational19.oracles ++ Relational20.oracles ++ Relational21.oracles ++ Relational22.oracles ++ Relational23.oracles ++ Relational24.oracles ++ Relational25.oracles ++ Fuzz.oracles
+  def oracleSql: Map[String, String] = modules.flatMap(_.oracles).toMap
+}
+
+/** An operator module: its registered queries and their DuckDB
+  * oracles (SQL-expressible queries only). */
+trait QueryModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracles: Map[String, String]
 }

@@ -20,7 +20,7 @@ import graft.Tables
   * recent prior view event (ties impossible — event times are
   * microsecond-distinct).
   */
-object AsOfJoin {
+object AsOfJoin extends graft.QueryModule {
 
   /** Generic as-of: for each row of `right`, attach the latest `left`
     * row with the same `key` and `leftTime <= rightTime` — or, with

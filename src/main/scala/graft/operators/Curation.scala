@@ -11,7 +11,7 @@ import graft.functions.NativeKernels.{hash64_native, word_shingles}
   * extensions). All pure map-side column work except contamination
   * (one broadcast semi join on shingles).
   */
-object Curation {
+object Curation extends graft.QueryModule {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")

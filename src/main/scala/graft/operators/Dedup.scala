@@ -28,7 +28,7 @@ import graft.functions.NativeKernels.{word_shingles, word_tokens, minhash_signat
   *    code over a 64-bit signature (7+ bands × 9 bits = 512-value
   *    keys) plus the `maxBucket` skew cap.
   */
-object Dedup {
+object Dedup extends graft.QueryModule {
 
   private[graft] val N = 3     // shingle width (words)
   private[graft] val K = 16    // minhash signature length

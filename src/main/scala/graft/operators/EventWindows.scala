@@ -14,7 +14,7 @@ import graft.Tables
   * the shuffle (Spark's own expansion strategy) — at 100 TB pick
   * slide ratios small enough that the expansion stays bounded.
   */
-object EventWindows {
+object EventWindows extends graft.QueryModule {
 
   private def ev(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "events")

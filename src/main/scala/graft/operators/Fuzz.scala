@@ -80,7 +80,7 @@ import graft.Tables
   * COALESCEd to a sentinel in both renderers, null-skipping
   * count(col) alongside count(*).
   */
-object Fuzz {
+object Fuzz extends graft.QueryModule {
 
   private val N_QUERIES = 12
   private val NULL_SEEDS = 13 to 20

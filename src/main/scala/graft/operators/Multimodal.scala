@@ -29,7 +29,7 @@ import graft.functions.MediaCodec
   * metadata-only queries (m02) read pruned meta columns without ever
   * touching blob bytes.
   */
-object Multimodal {
+object Multimodal extends graft.QueryModule {
 
   /** Decoded-media feature row (the "decode" output schema). For
     * audio, (width, height) carry (sample_rate, channels) — the WAV

@@ -20,7 +20,7 @@ import graft.Tables
   *  - engineered integer outputs are cast to BIGINT on both sides
   *    (DuckDB widens count/length to BIGINT/HUGEINT).
   */
-object Relational {
+object Relational extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

@@ -31,7 +31,7 @@ import graft.functions.NativeKernels.word_tokens
   * `/root/reference/src/Datalake2Anomali.py:1-449`); these extend the
   * §7.2 LLM-pipeline surface alongside t01-t30.
   */
-object Relational10 {
+object Relational10 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
@@ -384,11 +384,13 @@ object Relational10 {
       .orderBy($"vec_id")
   }
 
-  /** Slot-cached d08 pair table (the materializedPairs analog for the
-    * embedding pipeline) — shared by the registered d16 form. */
+  private val embPairCache = Materialized[DataFrame]()
+
+  /** Materialized d08 pair table (the materializedPairs analog for
+    * the embedding pipeline) — shared by the registered d16 form. */
   private[operators] def materializedEmbPairs(s: SparkSession,
       dir: String): DataFrame =
-    Relational4.materialized("embPairs", s, dir)(
+    embPairCache(s, dir)(
       Similarity.d08Pairs(s, dir).localCheckpoint())
 
   // ---- d15: quality-aware dedup apply -------------------------------

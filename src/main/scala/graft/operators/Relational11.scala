@@ -32,7 +32,7 @@ import graft.functions.NativeKernels.word_tokens
   * `/root/reference/src/Datalake2Anomali.py:1-449`); they extend the
   * SURVEY §7.2 LLM-pipeline/relational surface alongside tranches 1-10.
   */
-object Relational11 {
+object Relational11 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
@@ -353,33 +353,26 @@ object Relational11 {
   private val Q56_CUST_LO = 30L
   private val Q56_CUST_HI = 90L
 
-  private val zLayoutCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val zLayoutCache = Materialized[String]()
 
   /** Orders rewritten through
     * [[graft.sources.FileFormats.writeZOrderedParquet]] on q54's
     * Morton key (VERDICT r10 #4 — the layout op producing PRUNING,
-    * not just keys), cached per (session, dir) like the d06m/d07m
-    * pipeline state. Row-identical to `orders`; only the file
-    * clustering changes, so every query over it shares the original
-    * table's oracle. The temp directory is removed on JVM exit. */
+    * not just keys), materialized like the d06m/d07m pipeline
+    * state. Row-identical to `orders`; only the file clustering
+    * changes, so every query over it shares the original table's
+    * oracle. */
   def zOrderedOrdersPath(s: SparkSession, dir: String): String =
-    zLayoutCache.getOrElseUpdate((s, dir), {
+    zLayoutCache(s, dir) {
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-zorders")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(out.toFile)
-      }))
+      val out = Materialized.tempDir("graft-zorders")
       val days = datediff(to_date($"o_orderdate"), lit("1992-01-01").cast("date"))
       graft.sources.FileFormats.writeZOrderedParquet(
         t(s, dir, "orders"),
         zInterleave($"o_custkey", days.cast("long")),
         out.toString, Z_NUM_FILES, Z_MAX_RECORDS)
       out.toString
-    })
+    }
 
   /** Two-dimensional selective scan over the z-clustered layout: a
     * custkey band AND one order year — the predicate shape Z-ordering

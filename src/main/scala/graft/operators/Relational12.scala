@@ -28,7 +28,7 @@ import graft.functions.NativeKernels.word_tokens
   * `/root/reference/src/Datalake2Anomali.py:1-449`); they extend the
   * SURVEY §7.2 LLM-pipeline surface alongside tranches 1-11.
   */
-object Relational12 {
+object Relational12 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

@@ -29,7 +29,7 @@ import graft.functions.TextOps.{hash64, sqlHash64}
   * `/root/reference/src/Datalake2Anomali.py:1-449`); they extend the
   * SURVEY §7.2 LLM-pipeline surface alongside tranches 1-12.
   */
-object Relational13 {
+object Relational13 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
@@ -472,22 +472,21 @@ object Relational13 {
     s13tServe(e, sub, cb)
   }
 
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val pqCache = Materialized[(DataFrame, DataFrame)]()
 
   /** Frozen trained-PQ state — (quantized subspaces, trained
-    * codebook), trained ONCE per (session, dir); the d06m/s12m
-    * materialization convention applied to the ANN index lifecycle,
-    * so [[s13tm]] prices SERVING separately from the training run
-    * (VERDICT r11 #6). Both frames are localCheckpoints: corpus-sized
-    * `sub` and the K·M-row codebook. */
+    * codebook), trained ONCE; the d06m/s12m materialization
+    * convention applied to the ANN index lifecycle, so [[s13tm]]
+    * prices SERVING separately from the training run (VERDICT r11
+    * #6). Both frames are localCheckpoints: corpus-sized `sub` and
+    * the K·M-row codebook. */
   def materializedTrainedPQ(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    pqCache.getOrElseUpdate((s, dir), {
+    pqCache(s, dir) {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val sub = pqSubQ(e).localCheckpoint()
       (sub, pqTrainCodebook(sub))
-    })
+    }
 
   /** [[s13t]] from the frozen codebook: only codes/LUT/ADC/rerank run
     * per call — the serving cost a deployed PQ index pays per query
@@ -838,14 +837,13 @@ object Relational13 {
     ivfIndexFrom(e, sub, cb)
   }
 
-  private val ivfBaseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), IvfIndex]
+  private val ivfBaseCache = Materialized[IvfIndex]()
 
-  /** [[ivfBaseIndex]] trained once per (session, dir) — the serving
-    * asset behind [[s27m]], mirroring [[materializedIvfIndex]]. */
+  /** [[ivfBaseIndex]] trained once — the serving asset behind
+    * [[s27m]], mirroring [[materializedIvfIndex]]. */
   private[graft] def materializedIvfBaseIndex(s: SparkSession,
       dir: String): IvfIndex =
-    ivfBaseCache.getOrElseUpdate((s, dir), ivfBaseIndex(s, dir))
+    ivfBaseCache(s, dir)(ivfBaseIndex(s, dir))
 
   /** Integer-routed probe cut for a (q_id, embedding) query frame:
     * each query's `nProbe` nearest cells by exact long arithmetic on
@@ -932,10 +930,9 @@ object Relational13 {
     ivfServe(ix, q, ivfRoute(ix.cent, q))
   }
 
-  private val ivfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), IvfIndex]
+  private val ivfCache = Materialized[IvfIndex]()
 
-  /** The frozen [[IvfIndex]] trained ONCE per (session, dir) — the
+  /** The frozen [[IvfIndex]] trained ONCE — the
     * [[materializedTrainedPQ]]/s13tm convention applied to the WHOLE
     * trained-IVF asset set (r16 verdict #2: s14/s26i re-trained both
     * quantizers per execution — 3-4 s of pure build cost per bench
@@ -946,7 +943,7 @@ object Relational13 {
     * the same frozen index. */
   private[graft] def materializedIvfIndex(s: SparkSession,
       dir: String): IvfIndex =
-    ivfCache.getOrElseUpdate((s, dir), ivfIndex(s, dir))
+    ivfCache(s, dir)(ivfIndex(s, dir))
 
   /** [[s14]] from the frozen index: only route → probe semi-join →
     * integer ADC → exact rerank run per call — the serving cost a

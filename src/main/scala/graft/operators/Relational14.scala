@@ -31,7 +31,7 @@ import graft.functions.TextOps.sqlTokens
   * SURVEY §7.2 LLM-pipeline/relational surface alongside tranches
   * 1-13.
   */
-object Relational14 {
+object Relational14 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
@@ -92,12 +92,11 @@ object Relational14 {
   private[graft] val Q58_BUCKETS = 8
   private[graft] val Q58_INGEST_TASKS = 4
 
-  private val bktCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
+  private val bktCache = Materialized[(String, String)]()
 
   /** Orders + lineitem rewritten as BUCKETED tables on the join key
-    * (`bucketBy(8, orderkey)`, sorted within buckets), cached per
-    * (session, dir) like q56's Z-ordered layout. Bucketing is THE
+    * (`bucketBy(8, orderkey)`, sorted within buckets), materialized
+    * like q56's Z-ordered layout. Bucketing is THE
     * layout lever for the repeated fact-fact join: both sides hash-
     * partition into the same 8 buckets at WRITE time, so every later
     * join on orderkey reads bucket i against bucket i and the
@@ -115,19 +114,13 @@ object Relational14 {
     * while the within-bucket sort is only PER FILE — Spark declares
     * a read-side ordering solely in the one-file-per-bucket case, so
     * the join plans a (bucket-local, memory-sized) Sort and ZERO
-    * exchanges. Tables are EXTERNAL at a temp path removed on JVM
-    * exit; metadata lives in the session catalog. */
+    * exchanges. Tables are EXTERNAL at a temp path; metadata lives in
+    * the session catalog. */
   def bucketedTablePair(s: SparkSession, dir: String): (String, String) =
-    bktCache.getOrElseUpdate((s, dir), {
+    bktCache(s, dir) {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      val out = java.nio.file.Files.createTempDirectory("graft-bucketed")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(out.toFile)
-      }))
+      val out = Materialized.tempDir("graft-bucketed")
       val oTbl = s"graft_bkt_orders_$tag"
       val lTbl = s"graft_bkt_lineitem_$tag"
       // round-robin (NOT hash-by-key) across the ingest tasks: key
@@ -144,7 +137,7 @@ object Relational14 {
         .bucketBy(Q58_BUCKETS, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable(lTbl)
       (oTbl, lTbl)
-    })
+    }
 
   /** Per-priority order economics over the BUCKETED layout: the
     * orders⋈lineitem join runs bucket-local (no data-sized shuffle —
@@ -389,26 +382,18 @@ object Relational14 {
 
   private[graft] val Q59_MONTH = "1995-03"
 
-  private val cowCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val cowCache = Materialized[String]()
 
   /** Orders laid out hive-partitioned by order month, then upserted
     * copy-on-write: the delta re-prices every [[Q59_MONTH]] order
     * (+1), and [[graft.sources.FileFormats.cowUpsertByPartition]]
     * rewrites exactly that ONE month directory — the other ~80 month
     * partitions stay byte-identical on disk (FileFormatsSpec hashes
-    * them). Cached per (session, dir), the q56/q58 layout
-    * convention. */
+    * them). Materialized by the q56/q58 layout convention. */
   def upsertedOrdersPath(s: SparkSession, dir: String): String =
-    cowCache.getOrElseUpdate((s, dir), {
+    cowCache(s, dir) {
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-cow")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(out.toFile)
-      }))
+      val out = Materialized.tempDir("graft-cow")
       val om = date_format($"o_orderdate", "yyyy-MM")
       t(s, dir, "orders").withColumn("om", om)
         .write.mode("overwrite").partitionBy("om").parquet(out.toString)
@@ -418,7 +403,7 @@ object Relational14 {
       graft.sources.FileFormats.cowUpsertByPartition(
         s, out.toString, delta, "om", "o_orderkey")
       out.toString
-    })
+    }
 
   /** Monthly order economics over the COW-upserted layout: the
     * result must equal applying the re-price IN SQL to the original

@@ -32,7 +32,7 @@ import graft.functions.TextOps.{sqlHash64, sqlTokens}
   * SURVEY §7.2 LLM-pipeline/relational surface alongside tranches
   * 1-14.
   */
-object Relational15 {
+object Relational15 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
@@ -142,16 +142,18 @@ object Relational15 {
 
   // ---- d19: incremental substring spans (ingest shape) --------------
 
+  private val gramCountCache = Materialized[DataFrame]()
+
   /** Round-(N−1) state of the incremental substring-dedup pipeline:
     * gram-hash occurrence counts of the OLD (already-ingested) corpus
     * — the inverted count table a 100 TB pipeline materializes
-    * alongside its corpus. Built once per (session, dir); counts form
-    * a commutative monoid, so state ⊕ new-batch counts ≡ full
-    * recompute (the q57/d14 merge-algebra discipline,
-    * property-checked in Relational15Spec). */
+    * alongside its corpus. Built once; counts form a commutative
+    * monoid, so state ⊕ new-batch counts ≡ full recompute (the
+    * q57/d14 merge-algebra discipline, property-checked in
+    * Relational15Spec). */
   def materializedGramCounts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Relational4.materialized("d19_old_gram_counts", s, dir)(
+    gramCountCache(s, dir)(
       posGrams(s, dir).filter(!Relational10.isNewDoc($"doc_id"))
         .groupBy($"gh").agg(count(lit(1)).as("m_old"))
         .localCheckpoint())
@@ -221,12 +223,14 @@ object Relational15 {
       .orderBy($"doc_id")
   }
 
+  private val spanCache = Materialized[DataFrame]()
+
   /** Materialized d17 span table — detection (gram kernel, dup-gram
-    * count, join-back, merge) paid ONCE per (session, dir), the
-    * d06m/t29m convention; the fresh-build d17/d18 entries price the
-    * detection, these price the pipeline. */
+    * count, join-back, merge) paid ONCE, the d06m/t29m convention;
+    * the fresh-build d17/d18 entries price the detection, these price
+    * the pipeline. */
   def materializedSpans(s: SparkSession, dir: String): DataFrame =
-    Relational4.materialized("d17_spans", s, dir)(d17(s, dir).localCheckpoint())
+    spanCache(s, dir)(d17(s, dir).localCheckpoint())
 
   /** d17 from the span cache — serving cost only. */
   def d17m(s: SparkSession, dir: String): DataFrame = {
@@ -307,24 +311,17 @@ object Relational15 {
 
   private val Q60_NATIONS = Seq("NATION_3", "NATION_7", "NATION_19")
 
-  private val dppCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val dppCache = Materialized[String]()
 
   /** Orders denormalized with the customer's nation key and written
     * HIVE-PARTITIONED by it — the date/region-partitioned fact layout
-    * every 100 TB warehouse uses, cached per (session, dir) like
-    * q56's Z-ordered fixture. `repartition` on the partition column
-    * keeps it to one file per partition directory at these SFs. */
+    * every 100 TB warehouse uses, materialized like q56's Z-ordered
+    * fixture. `repartition` on the partition column keeps it to one
+    * file per partition directory at these SFs. */
   def dppOrdersPath(s: SparkSession, dir: String): String =
-    dppCache.getOrElseUpdate((s, dir), {
+    dppCache(s, dir) {
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-dpp")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(out.toFile)
-      }))
+      val out = Materialized.tempDir("graft-dpp")
       t(s, dir, "orders")
         .join(broadcast(t(s, dir, "customer")
           .select($"c_custkey", $"c_nationkey")), $"o_custkey" === $"c_custkey")
@@ -333,7 +330,7 @@ object Relational15 {
         .write.partitionBy("c_nationkey")
         .parquet(out.resolve("orders_by_nation").toString)
       out.resolve("orders_by_nation").toString
-    })
+    }
 
   /** Fact ⋈ filtered dim over the partitioned layout. The dim filter
     * (`n_name IN …`) is NOT a predicate on the fact's columns, so

@@ -35,49 +35,38 @@ import graft.functions.NativeKernels.word_tokens
   * `/root/reference/src/Datalake2Anomali.py:1-449`); they extend the
   * SURVEY §7.2 surface alongside tranches 1-15.
   */
-object Relational16 {
+object Relational16 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
-
-  private def rmOnExit(out: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(out.toFile)
-    }))
 
   private def om(c: org.apache.spark.sql.Column) = date_format(c, "yyyy-MM")
 
   // ---- q61: small-file compaction ----------------------------------
 
-  private val compactCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (String, Long, Long)]
+  private val compactCache = Materialized[(String, Long, Long)]()
 
   /** Orders written DELIBERATELY fragmented (16 round-robin tasks ×
     * ~80 month partitions ≈ 16 files per partition — the shape a
     * micro-batched ingest leaves behind), then compacted by
     * [[graft.sources.FileFormats.compactPartitioned]]: one range
     * exchange on (month, order key), ~one sorted file per partition.
-    * Cached per (session, dir) with the before/after file counts so
-    * the spec can assert the file-count collapse AND the per-file
-    * sort; the ORACLE asserts the part nothing about the layout can
-    * excuse — content invariance. */
+    * Returned with the before/after file counts so the spec can
+    * assert the file-count collapse AND the per-file sort; the ORACLE
+    * asserts the part nothing about the layout can excuse — content
+    * invariance. */
   private[graft] def compactedOrders(s: SparkSession, dir: String)
       : (String, Long, Long) =
-    compactCache.getOrElseUpdate((s, dir), {
+    compactCache(s, dir) {
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-compact")
-      rmOnExit(out)
+      val out = Materialized.tempDir("graft-compact")
       t(s, dir, "orders").withColumn("om", om($"o_orderdate"))
         .repartition(16)
         .write.mode("overwrite").partitionBy("om").parquet(out.toString)
       val (before, after) = graft.sources.FileFormats.compactPartitioned(
         s, out.toString, "om", "o_orderkey", maxRecordsPerFile = 200000L)
       (out.toString, before, after)
-    })
+    }
 
   /** Monthly order economics over the COMPACTED layout — must equal
     * the same aggregate over the original table (the q56/q59
@@ -104,8 +93,7 @@ object Relational16 {
 
   private[graft] val Q62_MONTH = "1996-06"
 
-  private val snapCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val snapCache = Materialized[String]()
 
   /** Orders as a [[graft.sources.SnapshotTable]]: v1 = the base
     * table range-partitioned 8 ways on the order key before the
@@ -114,12 +102,11 @@ object Relational16 {
     * v2 = a COW upsert re-pricing every [[Q62_MONTH]] order (+2).
     * Both versions stay readable — v2's manifest shares every
     * untouched partition's files with v1's by reference (the spec
-    * proves the sharing). Cached per (session, dir). */
+    * proves the sharing). */
   private[graft] def snapshotOrdersPath(s: SparkSession, dir: String): String =
-    snapCache.getOrElseUpdate((s, dir), {
+    snapCache(s, dir) {
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-snap")
-      rmOnExit(out)
+      val out = Materialized.tempDir("graft-snap")
       val base = t(s, dir, "orders").withColumn("om", om($"o_orderdate"))
         .repartitionByRange(8, $"o_orderkey")
       graft.sources.SnapshotTable.init(
@@ -130,7 +117,7 @@ object Relational16 {
         s, out.toString, delta, "om", "o_orderkey", "o_orderkey",
         Some("o_custkey"))
       out.toString
-    })
+    }
 
   /** Monthly economics AT BOTH VERSIONS of the upserted snapshot
     * table in one plan — version 1 read AFTER version 2 committed

@@ -36,21 +36,20 @@ import graft.sources.SnapshotTable
   * cohort, surfaced both from the rewritten partition's pre/post
   * diff and from the mask walk over shared files).
   */
-object Relational17 {
+object Relational17 extends graft.QueryModule {
 
   private[graft] val COHORT = 7L     // deleted customers: custkey % 10
   private[graft] val M4 = "1997-03"  // the v4 rewritten month
   private[graft] val M6 = "1995-09"  // the v6 schema-evolution month
   private[graft] val KEY_SHIFT = 100000000L
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val cache = Materialized[String]()
 
   /** Tranche-16's snapshot table extended to v3 (MOR cohort delete)
     * and v4 (partial COW re-price + inserts). q62/q63 pin versions
     * 1-2 and are untouched by the extension. */
   private[graft] def snapV4(s: SparkSession, dir: String): String =
-    cache.getOrElseUpdate((s, dir), {
+    cache(s, dir) {
       import s.implicits._
       val path = Relational16.snapshotOrdersPath(s, dir)
       if (SnapshotTable.currentVersion(path) < 3) {
@@ -86,7 +85,7 @@ object Relational17 {
           "o_orderkey", Some("o_custkey"))
       }
       path
-    })
+    }
 
   private def cents(c: org.apache.spark.sql.Column) =
     round(c * 100).cast("long")
@@ -372,9 +371,7 @@ object Relational17 {
 
   private[graft] val M71 = "1996-08" // the q71 re-priced month
 
-  private val vacCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (String, Int, Int)]
+  private val vacCache = Materialized[(String, Int, Int)]()
 
   /** A dedicated snapshot table (the SHARED fixture must keep its
     * history — q62/q64 time-travel into it) built, upserted, then
@@ -383,15 +380,9 @@ object Relational17 {
     * kept) so the spec can assert the orphan sweep. */
   private[graft] def vacuumedOrders(s: SparkSession, dir: String)
       : (String, Int, Int) =
-    vacCache.getOrElseUpdate((s, dir), {
+    vacCache(s, dir) {
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-vac")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(out.toFile)
-      }))
+      val out = Materialized.tempDir("graft-vac")
       val base = graft.Tables.load(s, dir, "orders")
         .withColumn("om", date_format($"o_orderdate", "yyyy-MM"))
         .filter($"om" < "1997-01")
@@ -403,7 +394,7 @@ object Relational17 {
         "o_orderkey", "o_orderkey")
       val (del, kept) = SnapshotTable.expireVersions(s, out.toString, 2)
       (out.toString, del, kept)
-    })
+    }
 
   /** Monthly economics AFTER vacuum: v1's history is gone by design,
     * v2 must read byte-for-byte what it read before the sweep — a

@@ -26,7 +26,7 @@ import graft.functions.NativeKernels.word_tokens
   * `/root/reference/src/Datalake2Anomali.py:1-449`); they extend the
   * SURVEY §7.2 retrieval/graph tiers alongside tranches 1-17.
   */
-object Relational18 {
+object Relational18 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

@@ -32,7 +32,7 @@ import graft.Tables
   * `/root/reference/src/Datalake2Anomali.py:1-449`); they extend the
   * SURVEY §7.2 relational/event/graph tiers alongside tranches 1-18.
   */
-object Relational19 {
+object Relational19 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

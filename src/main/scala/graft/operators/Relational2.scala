@@ -9,7 +9,7 @@ import graft.functions.NativeKernels.{word_shingles, word_tokens}
   * continuous percentiles, arg-max aggregates, n-gram frequency
   * (text), and near-dup application (the "make the corpus unique"
   * step a training-data pipeline actually runs after detection). */
-object Relational2 {
+object Relational2 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

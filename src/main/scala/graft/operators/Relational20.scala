@@ -25,7 +25,7 @@ import graft.sources.SnapshotTable
   * format at all (`/root/reference/src/Datalake2Anomali.py:246-253`);
   * these complete the SURVEY §7.2 lakehouse tier.
   */
-object Relational20 {
+object Relational20 extends graft.QueryModule {
 
   private[graft] val WAP_MONTH = "1995-06" // the audited re-price month
   private[graft] val BAD_MONTH = "1995-03" // the rejected branch's month
@@ -34,18 +34,8 @@ object Relational20 {
   private def cents(c: org.apache.spark.sql.Column) =
     round(c * 100).cast("long")
 
-  private def rmOnExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
-
-  private val wapCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val evoCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val wapCache = Materialized[String]()
+  private val evoCache = Materialized[String]()
 
   /** The WAP fixture: v1 = 1995 orders by month; a BAD branch (every
     * [[BAD_MONTH]] price negated) is staged, fails its audit
@@ -54,10 +44,9 @@ object Relational20 {
     * audit, and is PUBLISHED as v2. The final table must show exactly
     * the audited delta and nothing of the rejected one. */
   private[graft] def wapOrdersPath(s: SparkSession, dir: String): String =
-    wapCache.getOrElseUpdate((s, dir), {
+    wapCache(s, dir) {
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-wap")
-      rmOnExit(out)
+      val out = Materialized.tempDir("graft-wap")
       val path = out.toString
       val base = graft.Tables.load(s, dir, "orders")
         .withColumn("om", date_format($"o_orderdate", "yyyy-MM"))
@@ -83,7 +72,7 @@ object Relational20 {
       require(violations("reprice-jun") == 0, "good branch must pass audit")
       SnapshotTable.publishBranch(s, path, "reprice-jun")
       path
-    })
+    }
 
   /** Monthly economics of the table AFTER the WAP cycle: the oracle
     * restates the audited re-price from the raw rows, so the hash
@@ -117,10 +106,9 @@ object Relational20 {
     * and the new files' day-grain stats windows are what
     * [[SnapshotTable.readVersionEvolvedPruned]] prunes with. */
   private[graft] def evolvedOrdersPath(s: SparkSession, dir: String): String =
-    evoCache.getOrElseUpdate((s, dir), {
+    evoCache(s, dir) {
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-evo")
-      rmOnExit(out)
+      val out = Materialized.tempDir("graft-evo")
       val path = out.toString
       val raw = graft.Tables.load(s, dir, "orders")
         .withColumn("o_dayl", unix_date(to_date($"o_orderdate")).cast("long"))
@@ -135,7 +123,7 @@ object Relational20 {
         .repartition($"od")
       SnapshotTable.evolveAppend(s, path, delta, "od", "o_dayl")
       path
-    })
+    }
 
   /** Monthly economics across BOTH partition specs in one read: rows
     * landed under `om=` have `od` null and vice versa, so the month
@@ -165,8 +153,7 @@ object Relational20 {
   private[graft] val MERGE_MONTH = "1995-09" // the merged change-feed month
   private[graft] val MERGE_SHIFT = 10000000L // insert clones' key offset
 
-  private val mergeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val mergeCache = Materialized[String]()
 
   /** The WAP table extended by one MERGE commit (v3): a mixed change
     * feed over [[MERGE_MONTH]] — keys ≡ 0 (mod 7) DELETE, keys ≡ 1
@@ -175,7 +162,7 @@ object Relational20 {
     * [[SnapshotTable.mergeCommit]]. q75 pins version 2, so extending
     * the shared fixture is safe (the snapV4 convention). */
   private[graft] def mergedOrdersPath(s: SparkSession, dir: String): String =
-    mergeCache.getOrElseUpdate((s, dir), {
+    mergeCache(s, dir) {
       import s.implicits._
       val path = wapOrdersPath(s, dir)
       if (SnapshotTable.currentVersion(path) < 3) {
@@ -194,7 +181,7 @@ object Relational20 {
           "o_orderkey", "o_orderkey")
       }
       path
-    })
+    }
 
   /** Monthly economics after the MERGE commit: deletes, updates, and
     * inserts from one feed, one version bump. The oracle restates the

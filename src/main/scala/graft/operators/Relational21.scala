@@ -20,7 +20,7 @@ import graft.sources.{SnapshotTable, TableMaintenance}
   * [[graft.streaming.SnapshotIngest.startMaintained]] as its live
   * face.
   */
-object Relational21 {
+object Relational21 extends graft.QueryModule {
 
   /** Task = order-key parity — the one way to pin a file layout with
     * NO sampled bounds and no optimizer discretion (see
@@ -36,21 +36,12 @@ object Relational21 {
   private def cents(c: org.apache.spark.sql.Column) =
     round(c * 100).cast("long")
 
-  private def rmOnExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
-
   /** The GDPR cohort the fixture's MOR delete removes (custkey mod
     * 10) — distinct from Relational17's 7 so the two lifecycle
     * fixtures can never be confused. */
   private[graft] val MAINT_COHORT = 3L
 
-  private val maintCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, Seq[TableMaintenance.Action])]
+  private val maintCache = Materialized[(String, Seq[TableMaintenance.Action])]()
 
   /** A DEDICATED fixture (the q71/q75 convention — maintenance
     * destroys history, so the shared q62-q78 table must never see
@@ -66,14 +57,12 @@ object Relational21 {
     * v2 = a MOR cohort delete (mask, zero rewrite); then ONE
     * maintenance pass under the default policy (1 file/partition,
     * keep 1 version) compacts every reachable partition, retires the
-    * mask, and vacuums v1-v2. Cached per (session, dir) with the
-    * action report. */
+    * mask, and vacuums v1-v2. Returned with the action report. */
   private[graft] def maintFixture(s: SparkSession, dir: String)
       : (String, Seq[TableMaintenance.Action]) =
-    maintCache.getOrElseUpdate((s, dir), {
+    maintCache(s, dir) {
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-maint")
-      rmOnExit(out)
+      val out = Materialized.tempDir("graft-maint")
       val base = t(s, dir, "orders")
         .withColumn("om", date_format($"o_orderdate", "yyyy-MM"))
       val frag = s.createDataFrame(
@@ -88,7 +77,7 @@ object Relational21 {
       val report = TableMaintenance.runOnce(s, out.toString,
         "om", "o_orderkey", "o_orderkey")
       (out.toString, report)
-    })
+    }
 
   /** Post-maintenance audit of the converged table, one row per
     * month: surviving row count and exact cents (the cohort's rows

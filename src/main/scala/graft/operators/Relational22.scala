@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * aggregate away from the view — order- and batch-split-free because
   * every maintained statistic is a SUM).
   */
-object Relational22 {
+object Relational22 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     graft.Tables.load(s, dir, n)

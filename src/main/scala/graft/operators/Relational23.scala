@@ -27,7 +27,7 @@ import graft.functions.NativeKernels.word_tokens
   * `/root/reference/src/Datalake2Anomali.py`); both extend SURVEY
   * §7.2's retrieval and graph tiers.
   */
-object Relational23 {
+object Relational23 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

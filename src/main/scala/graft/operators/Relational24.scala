@@ -45,7 +45,7 @@ import graft.Tables
   * SQL twins), so the policy can never drift from the faces it
   * schedules.
   */
-object Relational24 {
+object Relational24 extends graft.QueryModule {
 
   private[graft] val INS_FOLD_PPM = 100000L   // 10%
   private[graft] val DEL_REBUILD_PPM = 100000L // 10%

@@ -19,7 +19,7 @@ import graft.functions.NativeKernels.word_tokens
   * (`/root/reference/src/Datalake2Anomali.py`); this extends SURVEY
   * §7.2's retrieval tier.
   */
-object Relational25 {
+object Relational25 extends graft.QueryModule {
 
   private val PH_QDOCS = 5 // one phrase per doc_id < PH_QDOCS
   private val PH_LEN = 3   // phrase = the doc's first PH_LEN tokens

@@ -8,7 +8,7 @@ import graft.Tables
   * face of the pipeline's P3/C8 operators), pivot, EXCEPT ALL, and an
   * approximate-distinct operator (rows-only check — HLL sketches are
   * engine-specific by design). */
-object Relational3 {
+object Relational3 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

@@ -21,7 +21,7 @@ import graft.functions.TextOps.sqlTokens
   * Emitted fractions are single int/int divisions (bit-identical
   * across engines, no rounding needed).
   */
-object Relational5 {
+object Relational5 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

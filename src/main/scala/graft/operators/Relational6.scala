@@ -25,7 +25,7 @@ import graft.functions.TextOps.{sqlTokens, sqlShinglesOfT}
   * q45/q46/e04 run IDENTICAL SQL on both engines (the q41/q43
   * convention): the oracle string is the query string.
   */
-object Relational6 {
+object Relational6 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

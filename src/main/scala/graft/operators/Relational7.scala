@@ -38,7 +38,7 @@ import graft.functions.NativeKernels.word_tokens
   *    series (strictly-preceding baseline on exact integer window
   *    sums; streaming face [[graft.streaming.AnomalyStream]]).
   */
-object Relational7 {
+object Relational7 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
@@ -414,14 +414,16 @@ object Relational7 {
       .orderBy($"cand_id")
   }
 
-  /** Materialized cross-corpus candidate pairs — d11 detected once
-    * per (session, dir), checkpointed, shared by q51m (and any other
-    * consumer of cross-corpus near-dup state). The pipeline analog of
+  private val crossPairCache = Materialized[DataFrame]()
+
+  /** Materialized cross-corpus candidate pairs — d11 detected once,
+    * checkpointed, shared by q51m (and any other consumer of
+    * cross-corpus near-dup state). The pipeline analog of
     * [[Relational4.materializedPairs]]: a real deployment detects
     * incoming-vs-reference collisions once per ingest batch and feeds
     * every downstream resolution/reporting stage from that table. */
   def materializedCrossPairs(s: SparkSession, dir: String): DataFrame =
-    Relational4.materialized("d11_cross_pairs", s, dir)(
+    crossPairCache(s, dir)(
       d11(s, dir).localCheckpoint())
 
   /** q51 output from the materialized pair state: only the

@@ -41,7 +41,7 @@ import graft.functions.NativeKernels.{word_tokens, word_shingles}
   *  - t27: Zipf rank-frequency fit per source (power-law
   *    vocabulary-health check).
   */
-object Relational8 {
+object Relational8 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

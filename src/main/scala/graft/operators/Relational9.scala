@@ -21,7 +21,7 @@ import graft.operators.Dedup.sqlShingleRows
   *    to t29 (folds per near-dup cluster, leakage impossible by
   *    construction).
   */
-object Relational9 {
+object Relational9 extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

@@ -12,7 +12,7 @@ import graft.functions.TextOps._
   * shuffle (except the langid argmax, done per-row via array sort, not
   * a window), so they scale linearly to 100 TB.
   */
-object TextAnalysis {
+object TextAnalysis extends graft.QueryModule {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")

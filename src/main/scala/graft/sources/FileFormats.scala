@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -171,9 +172,6 @@ object FileFormats {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partCol)
       .parquet(tmp.toString)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-    }
     // swap so every intermediate state keeps ONE complete copy on
     // disk: base steps aside (rename), tmp renames into place, only
     // then is the old copy deleted — a crash mid-swap leaves either
@@ -182,10 +180,10 @@ object FileFormats {
     // a crash between the two moves of a PREVIOUS compaction leaves a
     // stale old-copy directory behind; clear it or the step-aside
     // move below throws FileAlreadyExistsException forever
-    if (old.exists) rm(old)
+    FileUtils.deleteQuietly(old)
     java.nio.file.Files.move(base.toPath, old.toPath)
     java.nio.file.Files.move(tmp.toPath, base.toPath)
-    rm(old)
+    FileUtils.deleteQuietly(old)
     (before, listPartFiles(base).size.toLong)
   }
 
@@ -220,10 +218,7 @@ object FileFormats {
         .unionByName(dRows)
       val tmp = new java.io.File(s"$basePath/_cow_tmp_$p")
       merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
+      FileUtils.deleteQuietly(dir)
       java.nio.file.Files.move(tmp.toPath, dir.toPath)
     }
     affected

@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
+import org.apache.commons.io.FileUtils
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -191,15 +192,12 @@ object SnapshotTable {
       java.util.UUID.randomUUID().toString.take(8))
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
       .parquet(stage.toString)
-    def rmStage(f: File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rmStage)); f.delete(): Unit
-    }
     // an EMPTY staged frame (e.g. a changelog batch whose deletes
     // empty every touched partition with no inserts) writes no
     // part-files — reading it back would fail schema inference, so
     // the commit proceeds with only its carried-over entries
     if (FileFormats.listPartFiles(stage).isEmpty) {
-      rmStage(stage)
+      FileUtils.deleteQuietly(stage)
       return Seq.empty
     }
     // one pass over the staged files — stats per physical file
@@ -227,10 +225,7 @@ object SnapshotTable {
       FileEntry(s"$partDir/$name", mn, mx, rows,
         blooms.getOrElse(s"$partDir/${f.getName}", ""))
     }
-    def rm(f: File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(stage)
+    FileUtils.deleteQuietly(stage)
     moved.sortBy(_.rel)
   }
 
@@ -602,10 +597,7 @@ object SnapshotTable {
       FileEntry(s"_delete/$name", stats.getLong(0), stats.getLong(1),
         stats.getLong(2))
     }
-    def rm(f: File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(stage)
+    FileUtils.deleteQuietly(stage)
     commitManifestOrClean(path, commit, manifest(path, v), entries,
       deleteManifest(path, v) ++ entries, batchId = carriedBatchId(path))
     versionSchema(path, v).foreach(commitSchema(path, commit, _))

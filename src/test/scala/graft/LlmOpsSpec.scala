@@ -122,6 +122,11 @@ class LlmOpsSpec extends SparkSpec {
     // oracle-checked via deterministic estimators or error-bound flags.
     assert((q -- o) == Set("x04_heavy_hitters"),
       s"undocumented rows-only queries: ${q -- o}")
+    // no module registers a name another module already registered
+    // (the merged map would silently keep only the later entry)
+    val ms = SparkEntry.modules
+    assert(ms.map(_.queries.size).sum == SparkEntry.queries.size)
+    assert(ms.map(_.oracles.size).sum == SparkEntry.oracleSql.size)
   }
 
   test("t16 winnowing: strong near-dups share a fingerprint") {

@@ -11,7 +11,8 @@ Usage: python3 tools/check_oracles.py /root/testdata/sf0.01 /tmp/verify_out \
            [CORRECTNESS_local.json]
 
 The optional third argument writes a machine-readable gate summary
-(git SHA, SF, per-query rows/schema/hash booleans) — the round's
+(git SHA, SF, per-query rows/schema/hash booleans, and per-query
+DuckDB and compare seconds) — the round's
 SELF-EVIDENCING correctness artifact (r14 verdict #2: the driver's
 CORRECTNESS_r14.json came back empty, and without a committed local
 twin the round's hard signal had to be re-established by hand; with
@@ -19,7 +20,7 @@ one, an empty driver artifact is instantly attributable to the
 harness, not the code).
 """
 import subprocess
-import sys, os, json, math
+import sys, os, json, math, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -45,6 +46,7 @@ def main(sf_dir, out_dir, json_out=None):
         oracles = json.load(f)
     failures = 0
     report = {}
+    secs = {}  # name -> (DuckDB seconds, compare seconds)
     for name in sorted(oracles):
         sql = oracles[name]
         res_dir = os.path.join(out_dir, name)
@@ -53,6 +55,7 @@ def main(sf_dir, out_dir, json_out=None):
             report[name] = {"rows": False, "schema": False, "hash": False}
             failures += 1
             continue
+        t0 = time.perf_counter()
         try:
             spark_rel = con.sql(
                 f"SELECT * FROM '{res_dir}/*.parquet'")
@@ -66,11 +69,14 @@ def main(sf_dir, out_dir, json_out=None):
             oracle_rows = [tuple(r[i] for i in idx)
                            for r in oracle_rel.fetchall()]
         except Exception as e:
+            secs[name] = (time.perf_counter() - t0, 0.0)
             print(f"[ERR ] {name}: {e}")
             report[name] = {"rows": False, "schema": False, "hash": False}
             failures += 1
             continue
+        t1 = time.perf_counter()
         if spark_cols != o_cols:
+            secs[name] = (t1 - t0, 0.0)
             print(f"[COLS] {name}: spark={spark_cols} oracle={o_cols}")
             report[name] = {"rows": len(spark_rows) == len(oracle_rows),
                             "schema": False, "hash": False}
@@ -78,7 +84,9 @@ def main(sf_dir, out_dir, json_out=None):
             continue
         a = sorted([tuple(canon(v) for v in r) for r in spark_rows])
         b = sorted([tuple(canon(v) for v in r) for r in oracle_rows])
-        if a == b:
+        same = a == b
+        secs[name] = (t1 - t0, time.perf_counter() - t1)
+        if same:
             print(f"[ OK ] {name}: {len(a)} rows")
             report[name] = {"rows": True, "schema": True, "hash": True}
         else:
@@ -91,6 +99,13 @@ def main(sf_dir, out_dir, json_out=None):
                 print(f"        spark-only:  {r}")
             for r in list(sb - sa)[:3]:
                 print(f"        oracle-only: {r}")
+    for name, (d, c) in secs.items():
+        report[name]["duckdb_s"] = round(d, 3)
+        report[name]["compare_s"] = round(c, 3)
+    print("\nslowest oracles (DuckDB s, compare s):")
+    for name, (d, c) in sorted(secs.items(),
+                               key=lambda kv: -sum(kv[1]))[:10]:
+        print(f"  {name}: {d:.2f} {c:.2f}")
     print(f"\n{len(oracles) - failures}/{len(oracles)} queries match")
     if json_out:
         try:
