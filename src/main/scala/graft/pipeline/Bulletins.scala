@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import Model._
 import Sinks._
@@ -11,11 +13,12 @@ import Sinks._
   *
   * The reference does 2-3 HTTP round-trips *per advisory* serially
   * (`upload_bulletins`, `src/Datalake2Anomali.py:246-253`); here the
-  * probe is one bulk left-outer join against the sink-state table and
-  * the writes fan out over a fixed number of tasks. Races of the
+  * advisories and the sink-state table travel one hash exchange on `id`
+  * together, each write task probes the state it received, and the
+  * writes fan out over a fixed number of tasks. Races of the
   * probe-then-write MERGE under parallelism are avoided the same way
   * the reference's serial loop avoids them: each advisory id lands in
-  * exactly one task (a hash repartition on `id` before the writer).
+  * exactly one task.
   */
 object Bulletins {
 
@@ -42,9 +45,12 @@ object Bulletins {
     if (cfg.runAsCron)
       nowUtc.minusSeconds(cfg.uploadFrequencyHours * 3600L)
     else {
-      val row = sinkState.agg(max(to_timestamp(col("modified_ts")))).head()
-      if (row.isNullAt(0)) java.time.Instant.EPOCH
-      else row.getTimestamp(0).toInstant
+      // the max is taken on the driver: the state table is a driver-side
+      // read, and a Project over a local relation collects without a
+      // Spark job, where an aggregate would run two
+      val ts = sinkState.select(to_timestamp(col("modified_ts"))).collect()
+        .collect { case r if !r.isNullAt(0) => r.getTimestamp(0).toInstant }
+      if (ts.isEmpty) java.time.Instant.EPOCH else ts.max
     }
 
   /** S5 enrichment as a distributed map (adds `html`). The HTTP
@@ -55,13 +61,6 @@ object Bulletins {
     import advisories.sparkSession.implicits._
     advisories.mapPartitions(_.map(a => a.copy(html = fetcher.fetch(a.id))))
   }
-
-  /** J5 — the MERGE probe as one bulk left-outer join: returns the
-    * advisory rows annotated with `tip_id` (null ⇒ insert path). */
-  def mergeSplit(advisories: DataFrame, sinkState: DataFrame): DataFrame =
-    advisories.join(
-      sinkState.select(col("ww_id").as("id"), col("tip_id")),
-      Seq("id"), "left_outer")
 
   /** Tag assembly (C6/C7). The two reference paths order the leading
     * pair differently — insert is [world_watch_{id}, generic, *tags]
@@ -98,23 +97,16 @@ object Bulletins {
     lit("WorldWatch").as("source"),
     transform(patchTags, t => struct(t.as("name"))).as("tags_v2")))
 
-  /** The MERGE as write-ready rows `(id, tip_id, payload)`: the probe
-    * result picks each row's payload (insert JSON when `tip_id` is null,
-    * patch JSON otherwise), and a hash repartition on `id` with an
-    * explicit width — `defaultParallelism` — fans the rows out. AQE
-    * never coalesces an exchange of explicit width, and one id still
-    * lands in exactly one task. */
-  def mergePayloads(advisories: DataFrame, sinkState: DataFrame): DataFrame =
-    mergeSplit(advisories, sinkState)
-      .select(col("id"), col("tip_id"),
-        when(col("tip_id").isNull, insertPayload).otherwise(patchPayload)
-          .as("payload"))
-      .repartition(advisories.sparkSession.sparkContext.defaultParallelism,
-        col("id"))
-
-  /** Full MERGE write in one pass: [[mergePayloads]], then one
-    * `foreachPartition` that posts each insert row and patches each
-    * update row via the sink trait. Returns (accepted, failed) write
+  /** J5 and the MERGE write in one pass, with no join and no broadcast.
+    * Each advisory row carries both payloads; the state rows (`ww_id` as
+    * `id`, with its `tip_id`; a null `ww_id` matches nothing) join them
+    * in one hash repartition on `id` of explicit width
+    * `defaultParallelism`, which AQE never coalesces, so one id lands in
+    * exactly one task with all of its state. Each task groups its state
+    * rows by id, then posts an advisory that no state row matches and
+    * otherwise patches it once per matching `tip_id` — the left-outer
+    * join's multiplicity — via the sink trait. A large sink travels the
+    * shuffle like a shuffle join. Returns (accepted, failed) write
     * counts — mirroring [[Sinks.writeIntel]]: the reference logs post
     * failures and raises on patch failures
     * (`src/Datalake2Anomali.py:213-216,240-243`); here every
@@ -122,7 +114,8 @@ object Bulletins {
     * dropped. */
   def write(advisories: DataFrame, sinkState: DataFrame,
       sink: TipReportSink): (Long, Long) = {
-    val sc = advisories.sparkSession.sparkContext
+    val spark = advisories.sparkSession
+    val sc = spark.sparkContext
     val accepted = sc.longAccumulator("tipreport_accepted")
     val failed = sc.longAccumulator("tipreport_failed")
     def count(r: Sinks.UploadResult, what: String): Unit = r match {
@@ -131,12 +124,35 @@ object Bulletins {
         failed.add(1)
         System.err.println(s"[graft.sink] tipreport $what failed: $other")
     }
-    mergePayloads(advisories, sinkState)
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+    // the payloads are rendered before the probe picks the path, and only
+    // the patch JSON parses timestamp_updated: where that parse would
+    // fail (ANSI), the patch JSON is null and only a patch fails the write
+    val ts = col("timestamp_updated")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    val posts = advisories.select(col("id"), lit(null).cast("long").as("tip_id"),
+      insertPayload.as("insert"),
+      when(lit(!ansi) || ts.isNull || try_to_timestamp(ts).isNotNull, patchPayload)
+        .as("patch"))
+    // state rows carry no insert payload, which is how a task tells them apart
+    val tips = sinkState.filter(col("ww_id").isNotNull).select(col("ww_id"),
+      col("tip_id"), lit(null).cast("string"), lit(null).cast("string"))
+    posts.union(tips).repartition(sc.defaultParallelism, col("id"))
+      .foreachPartition { rows: Iterator[Row] =>
+        val state = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Row]]
+        val advisoryRows = mutable.ArrayBuffer.empty[Row]
         rows.foreach { r =>
-          val payload = r.getString(2)
-          if (r.isNullAt(1)) count(sink.post(payload), "post")
-          else count(sink.patch(r.getLong(1), payload), "patch")
+          if (r.isNullAt(2)) state.getOrElseUpdate(r.get(0), mutable.ArrayBuffer.empty) += r
+          else advisoryRows += r
+        }
+        advisoryRows.foreach { a =>
+          val matches = if (a.isNullAt(0)) Nil else state.getOrElse(a.get(0), Nil)
+          if (matches.isEmpty) count(sink.post(a.getString(2)), "post")
+          else matches.foreach { t =>
+            if (t.isNullAt(1)) count(sink.post(a.getString(2)), "post")
+            else if (a.isNullAt(3)) throw new IllegalArgumentException(
+              s"advisory ${a.get(0)}: timestamp_updated does not parse")
+            else count(sink.patch(t.getLong(1), a.getString(3)), "patch")
+          }
         }
       }
     (accepted.value, failed.value)

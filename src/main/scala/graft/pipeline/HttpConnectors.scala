@@ -18,8 +18,9 @@ import graft.sources.IocBulkSource
   *  - tipreport state GET `{anomali}/api/v1/threat_model_search/`
   *    (`:142-183`) — the reference probes this endpoint once per
   *    advisory, serially; here ONE paged bulk read materializes the
-  *    whole world-watch-tagged state table and the probe becomes the
-  *    distributed left-outer join in [[Bulletins.mergeSplit]];
+  *    whole world-watch-tagged state table, whose rows travel the
+  *    MERGE's hash exchange on `id` so each write task probes its own
+  *    share ([[Bulletins.write]]);
   *  - advisory list GET `{ww}/api/advisory/` + per-row html GET
   *    `{ww}/api/advisory/{id}/html` (`:397-440`) — the list is one
   *    driver-side request (as in the reference), the html fan-out runs

@@ -10,9 +10,10 @@ import Model._
   * /root/reference.
   *
   * Plan shape at scale: rows arrive partitioned by source query (one
-  * partition per bulk search, T4); ALL joins here are against tiny
-  * broadcast dimensions (queries ~10 rows, type map 6 rows), so the
-  * whole transform is map-side — zero shuffles between scan and sink.
+  * partition per bulk search, T4). Both lookups are against driver-side
+  * constants (queries ~10 rows, type map 6 rows) written as literal
+  * maps, so the whole transform is map-side: no exchange and no
+  * broadcast between scan and sink.
   */
 object IocTransform {
 
@@ -43,34 +44,41 @@ object IocTransform {
     * (`_generateIndicators`, `src/Datalake2Anomali.py:338-385`).
     *
     * @param rows    decoded bulk-search rows ([[Model.iocRowSchema]])
-    * @param queries validated query dimension ([[Model.QueryDescriptor]])
+    * @param queries validated query dimension ([[Model.QueryDescriptor]]);
+    *                collected on the driver, so it must be small (a local
+    *                relation collects without a Spark job)
     */
   def indicators(rows: DataFrame, queries: DataFrame, cfg: PipelineConfig)
       : DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
 
-    // J2/F2: 6-row type map as a broadcast inner join — a miss drops
-    // the row exactly like `DTL_TO_ANOMALI_TYPE.get(threat[0])` (:345)
-    val typeMap = dtlToAnomaliType.toSeq.toDF("atom_type", "anomali_type")
+    // J1 as a literal map query_hash → every descriptor with that hash:
+    // exploding the looked-up array keeps the inner join's multiplicity
+    // (a hash listed twice yields two rows; a miss or a null hash none)
+    val byHash = queries.as[QueryDescriptor].collect().toSeq.groupBy(_.query_hash)
 
     // J3 default-itype map as a literal map expression
     val defaultItype = map(
       cfg.defaultItype.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
 
     rows
-      .join(broadcast(typeMap), Seq("atom_type"))                       // J2/F2
-      .join(broadcast(queries), Seq("query_hash"))                      // J1
+      // J2/F2: a miss (or a null type) is null and is dropped, exactly
+      // like `DTL_TO_ANOMALI_TYPE.get(threat[0])` (:345)
+      .withColumn("anomali_type",
+        element_at(typedLit(dtlToAnomaliType), $"atom_type"))
+      .filter($"anomali_type".isNotNull)
+      .withColumn("query", explode(element_at(typedLit(byHash), $"query_hash"))) // J1
       // F3: md5-type indicators without a hash are discarded (:347-351)
       .filter($"anomali_type" =!= "md5" ||
         ($"hashes_md5".isNotNull && $"hashes_md5" =!= ""))
       .select(                                                          // P2
-        $"query_hash", $"dataset_name",
+        $"query_hash", $"query.dataset_name",
         $"anomali_type",
         // J3: per-query override, else global default (:353-358)
-        coalesce(element_at($"anomali_itype", $"anomali_type"),
+        coalesce(element_at($"query.anomali_itype", $"anomali_type"),
           element_at(defaultItype, $"anomali_type")).as("anomali_itype"),
-        $"anomali_severity",
+        $"query.anomali_severity",
         $"atom_type", $"atom_value",
         // conditional column: hash kept only for md5 types (:372)
         when($"anomali_type" === "md5", $"hashes_md5").as("hashes_md5"),

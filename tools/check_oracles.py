@@ -11,8 +11,9 @@ Usage: python3 tools/check_oracles.py /root/testdata/sf0.01 /tmp/verify_out \
            [CORRECTNESS_local.json]
 
 The optional third argument writes a machine-readable gate summary
-(git SHA, SF, per-query rows/schema/hash booleans, and per-query
-DuckDB and compare seconds) — the round's
+(git SHA and whether the tree had uncommitted changes, SF, per-query
+rows/schema/hash booleans, and per-query DuckDB and compare seconds) —
+the round's
 SELF-EVIDENCING correctness artifact (r14 verdict #2: the driver's
 CORRECTNESS_r14.json came back empty, and without a committed local
 twin the round's hard signal had to be re-established by hand; with
@@ -108,20 +109,25 @@ def main(sf_dir, out_dir, json_out=None):
         print(f"  {name}: {d:.2f} {c:.2f}")
     print(f"\n{len(oracles) - failures}/{len(oracles)} queries match")
     if json_out:
+        def git(*args):
+            return subprocess.run(["git", *args], capture_output=True,
+                                  text=True, check=True,
+                                  cwd=os.path.dirname(os.path.abspath(__file__))
+                                  ).stdout.strip()
         try:
-            sha = subprocess.run(["git", "rev-parse", "HEAD"],
-                                 capture_output=True, text=True,
-                                 cwd=os.path.dirname(os.path.abspath(__file__))
-                                 ).stdout.strip()
+            sha = git("rev-parse", "HEAD")
+            # a run over uncommitted changes is not a run of `sha`
+            dirty = git("status", "--porcelain") != ""
         except Exception:
-            sha = "unknown"
+            sha, dirty = "unknown", None
         n_match = sum(1 for v in report.values() if v["hash"])
         with open(json_out, "w") as f:
-            json.dump({"git_sha": sha, "sf": sf_dir,
+            json.dump({"git_sha": sha, "dirty": dirty, "sf": sf_dir,
                        "n_oracles": len(oracles), "n_match": n_match,
                        "queries": report}, f, sort_keys=True, indent=0)
             f.write("\n")
-        print(f"wrote {json_out}: {n_match}/{len(oracles)} at {sha[:12]}")
+        print(f"wrote {json_out}: {n_match}/{len(oracles)} at {sha[:12]}"
+              + (" (dirty)" if dirty else ""))
     return 1 if failures else 0
 
 
