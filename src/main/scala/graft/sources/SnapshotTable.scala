@@ -6,7 +6,8 @@ import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 import org.apache.commons.io.FileUtils
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Minimal manifest-committed table format with snapshot isolation,
@@ -87,34 +88,47 @@ object SnapshotTable {
     * exists in v(N)'s DDL, so files written before v(N) read with
     * the column null-filled, while a v(N−1) time-travel read uses
     * v(N−1)'s DDL and never sees the phantom column. */
-  def versionSchema(path: String, v: Int): Option[String] = {
-    val f = schemaFile(path, v)
-    if (Files.exists(f))
-      Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
-    else None
-  }
+  def versionSchema(path: String, v: Int): Option[String] =
+    readText(schemaFile(path, v))
 
-  private def commitSchema(path: String, v: Int, ddl: String): Unit = {
-    val target = schemaFile(path, v)
+  private def readText(f: java.nio.file.Path): Option[String] =
+    Option.when(Files.exists(f))(
+      new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
+
+  private def commitSchema(path: String, v: Int, ddl: String): Unit =
+    commitSchemaAt(schemaFile(path, v), ddl)
+
+  private def commitSchemaAt(target: java.nio.file.Path,
+      ddl: String): Unit = {
     Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(s".v$v.schema.tmp")
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
     Files.write(tmp, ddl.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private def readManifestLines(path: String, v: Int): Seq[Array[String]] =
-    Files.readAllLines(manifestFile(path, v), StandardCharsets.UTF_8)
+  private def readLinesAt(file: java.nio.file.Path): Seq[Array[String]] =
+    Files.readAllLines(file, StandardCharsets.UTF_8)
       .asScala.toSeq.filter(_.nonEmpty).map(_.split("\t"))
 
-  /** DATA-file entries of version `v` (delete files and meta lines —
-    * `D` delete, `B` ingest batch id, `S` branch staging provenance —
-    * excluded). */
-  def manifest(path: String, v: Int): Seq[FileEntry] =
-    readManifestLines(path, v).collect {
+  /** DATA-file entries of manifest `lines` (delete files and meta
+    * lines — `D` delete, `B` ingest batch id, `S` branch staging
+    * provenance — excluded). */
+  private def dataEntries(lines: Seq[Array[String]]): Seq[FileEntry] =
+    lines.collect {
       case p if p(0) != "D" && p(0) != "B" && p(0) != "S" =>
         FileEntry(p(0), p(1).toLong, p(2).toLong,
           p(3).toLong, if (p.length > 4 && p(4) != "-") p(4) else "")
     }
+
+  private def deleteEntries(lines: Seq[Array[String]]): Seq[FileEntry] =
+    lines.collect {
+      case p if p(0) == "D" => FileEntry(p(1), p(2).toLong, p(3).toLong,
+        p(4).toLong)
+    }
+
+  /** DATA-file entries of version `v`. */
+  def manifest(path: String, v: Int): Seq[FileEntry] =
+    dataEntries(readLinesAt(manifestFile(path, v)))
 
   /** The STREAMING-INGEST batch id committed with version `v` (a `B`
     * meta line in the manifest — written atomically WITH the file
@@ -122,45 +136,47 @@ object SnapshotTable {
     * dedup token and the commit are one rename). None for non-ingest
     * commits. */
   def batchIdOf(path: String, v: Int): Option[Long] =
-    readManifestLines(path, v).collectFirst {
+    readLinesAt(manifestFile(path, v)).collectFirst {
       case p if p(0) == "B" => p(1).toLong
     }
 
-  /** Highest ingest batch id across all LIVE commits (−1 if none) —
-    * live, because retention may have expired early manifests; the
-    * token survives anyway since every commit carries the running
-    * maximum forward ([[carriedBatchId]]). A manifest that a
-    * CONCURRENT vacuum deletes between the liveVersions listing and
-    * its read is skipped, which is safe for the same reason
-    * retention is: every later commit carries a ≥ token, so the
-    * surviving manifests still hold the max. */
-  def lastBatchId(path: String): Long =
-    liveVersions(path).flatMap { v =>
-      try batchIdOf(path, v)
-      catch { case _: java.nio.file.NoSuchFileException => None }
-    }.foldLeft(-1L)(math.max)
+  /** Highest ingest batch id committed so far (−1 if none), read from
+    * the LATEST manifest alone: every commit carries the running
+    * maximum forward ([[carriedBatchId]]), so retention that expired
+    * the manifest holding the highest `B` line loses nothing. */
+  def lastBatchId(path: String): Long = {
+    val v = currentVersion(path)
+    if (v == 0) -1L
+    else try tokenAt(path, v)
+    catch { case _: CommitConflictException => lastBatchId(path) }
+  }
+
+  /** The batch-id token of version `v` (−1 if none). A vacuum can
+    * expire `v` between a writer's listing and this read only once a
+    * newer version exists, so a vanished manifest is a lost race. */
+  private def tokenAt(path: String, v: Int): Long =
+    try batchIdOf(path, v).getOrElse(-1L)
+    catch {
+      case _: java.nio.file.NoSuchFileException =>
+        throw new CommitConflictException(path, v + 1)
+    }
 
   /** The batch-id token the NEXT commit must carry: the running max
-    * of its own id (if any) and everything committed so far. Without
-    * this, a retention pass that expires the manifest holding the
-    * highest `B` line would lose the exactly-once dedup token and a
-    * replayed batch would re-commit — carrying the max forward makes
-    * the token monotone through compaction, vacuum, and every other
-    * verb. */
-  private def carriedBatchId(path: String,
-      own: Option[Long] = None): Option[Long] = {
-    val m = own.foldLeft(lastBatchId(path))(math.max)
-    if (m >= 0) Some(m) else None
-  }
+    * of its own id (if any) and `last`, the token of the version it
+    * commits over. Without this, a retention pass that expires the
+    * manifest holding the highest `B` line would lose the exactly-once
+    * dedup token and a replayed batch would re-commit — carrying the
+    * max forward makes the token monotone through compaction, vacuum,
+    * and every other verb. */
+  private def carriedBatchId(last: Long,
+      own: Option[Long] = None): Option[Long] =
+    Some(own.foldLeft(last)(math.max)).filter(_ >= 0)
 
   /** EQUALITY-DELETE file entries of version `v` (min/max/rows are
     * stats on the deleted KEYS — they prune which data files a
     * delete can touch, the same way data stats prune scans). */
   def deleteManifest(path: String, v: Int): Seq[FileEntry] =
-    readManifestLines(path, v).collect {
-      case p if p(0) == "D" => FileEntry(p(1), p(2).toLong, p(3).toLong,
-        p(4).toLong)
-    }
+    deleteEntries(readLinesAt(manifestFile(path, v)))
 
   /** Every version whose manifest is still on disk, ascending —
     * after [[expireVersions]] the live set starts above 1, which is
@@ -179,13 +195,14 @@ object SnapshotTable {
     liveVersions(path).foldLeft(0)(math.max)
 
   /** Stage `df` partitioned by `partCol`, collect per-file stats on
-    * `statsCol` with one distributed aggregation, then move the
-    * part-files into the shared `files/` tree under commit-tagged
-    * names. Returns the new files' manifest entries. */
+    * `statsCol` (and blooms on `bloomCol`) in one pass over the staged
+    * files ([[fileStats]], read back with `df`'s schema, so no schema
+    * inference job), then move the part-files into the shared `files/`
+    * tree under commit-tagged names. Returns the new files' manifest
+    * entries. */
   private def stageFiles(df: DataFrame, path: String, partCol: String,
       statsCol: String, commit: Int,
       bloomCol: Option[String] = None): Seq[FileEntry] = {
-    val spark = df.sparkSession
     // writer-unique staging dir: two OCC writers racing the same
     // commit number must not overwrite each other's staged files
     val stage = new File(s"$path/_stage_${commit}_" +
@@ -194,36 +211,22 @@ object SnapshotTable {
       .parquet(stage.toString)
     // an EMPTY staged frame (e.g. a changelog batch whose deletes
     // empty every touched partition with no inserts) writes no
-    // part-files — reading it back would fail schema inference, so
-    // the commit proceeds with only its carried-over entries
-    if (FileFormats.listPartFiles(stage).isEmpty) {
-      FileUtils.deleteQuietly(stage)
-      return Seq.empty
-    }
-    // one pass over the staged files — stats per physical file
-    val stats = spark.read.parquet(stage.toString)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col(statsCol)).cast("long").as("mn"),
-        max(col(statsCol)).cast("long").as("mx"),
-        count(lit(1)).as("rows"))
-      .collect()
-      .map { r =>
-        val local = new File(new java.net.URI(r.getString(0)).getPath)
-        local.getParentFile.getName + "/" + local.getName ->
-          (r.getLong(1), r.getLong(2), r.getLong(3))
-      }.toMap
-    val blooms = bloomCol.map(bloomsPerFile(spark, stage.toString, _))
-      .getOrElse(Map.empty[String, String])
-    val moved = FileFormats.listPartFiles(stage).map { f =>
+    // part-files, so the commit proceeds with only its carried-over
+    // entries
+    val parts = FileFormats.listPartFiles(stage)
+    val stats =
+      if (parts.isEmpty) Map.empty[String, Array[Long]]
+      else fileStats(df.sparkSession.read.schema(df.schema)
+        .parquet(stage.toString), statsCol, bloomCol)
+    val moved = parts.map { f =>
       val partDir = f.getParentFile.getName // partCol=value
       val destDir = new File(s"${filesDir(path)}/$partDir")
       destDir.mkdirs()
       val name = s"c$commit-${f.getName.stripPrefix("part-")}"
-      val (mn, mx, rows) = stats(s"$partDir/${f.getName}")
+      val st = stats(s"$partDir/${f.getName}")
       Files.move(f.toPath, new File(destDir, name).toPath,
         StandardCopyOption.ATOMIC_MOVE)
-      FileEntry(s"$partDir/$name", mn, mx, rows,
-        blooms.getOrElse(s"$partDir/${f.getName}", ""))
+      FileEntry(s"$partDir/$name", st(1), st(2), st(0), bloomHex(st.drop(3)))
     }
     FileUtils.deleteQuietly(stage)
     moved.sortBy(_.rel)
@@ -262,42 +265,59 @@ object SnapshotTable {
       (nibble & (1 << (p % 4))) != 0
     }
 
-  /** One distributed aggregation building every staged file's bloom:
-    * each row explodes to its [[BLOOM_K]] bit positions, positions
-    * group to (file, word) bit_or partials, and the driver assembles
-    * [[BLOOM_BITS]]/4 hex chars per file (bit i ⇔ hex nibble i/4,
-    * bit i%4 — LITTLE-endian nibbles so probe math is index-only).
-    * The collect is (#files · 128) rows — layout-sized. The row→
-    * position hash is the Spark-side twin of [[jvmHash64]]
-    * (both are md5 first-15-hex; spec-pinned equal). */
-  private def bloomsPerFile(spark: SparkSession, stagePath: String,
-      bloomCol: String): Map[String, String] = {
-    val probes = (0 until BLOOM_K).map(i =>
-      pmod(graft.functions.TextOps.hash64(
-        concat(lit(s"$i:"), col(bloomCol).cast("string"))),
-        lit(BLOOM_BITS.toLong)))
-    val words = spark.read.parquet(stagePath)
-      .select(input_file_name().as("f"),
-        explode(array(probes: _*)).as("p"))
-      .select(col("f"), (col("p") / 64).cast("int").as("w"),
-        expr("shiftleft(CAST(1 AS BIGINT), CAST(pmod(p, 64) AS INT))")
-          .as("m"))
-      .groupBy(col("f"), col("w")).agg(expr("bit_or(m)").as("bits"))
-      .collect()
-    words.groupBy(r => r.getString(0)).map { case (f, rs) =>
-      val buf = new Array[Long](BLOOM_BITS / 64)
-      rs.foreach(r => buf(r.getInt(1)) = r.getLong(2))
-      val hex = new StringBuilder(BLOOM_BITS / 4)
-      var i = 0
-      while (i < BLOOM_BITS / 4) {
-        val nib = ((buf(i / 16) >>> ((i % 16) * 4)) & 0xfL).toInt
-        hex.append(Integer.toHexString(nib))
-        i += 1
+  /** Every staged file's `[rows, min, max, bloom words…]` (keyed
+    * `partDir/file`) in ONE pass with no shuffle: each task folds its
+    * rows into per-file partials and the driver merges those of files
+    * split across tasks — (#tasks · files per task) partials of ≤ 1 KB,
+    * layout-sized. No non-null stats value leaves the empty range
+    * [Long.MaxValue, Long.MinValue], which every range predicate
+    * prunes. Bloom bits are pmod(hash64("i:" + value), BLOOM_BITS), the
+    * Spark-side twin of [[jvmHash64]] (spec-pinned equal). */
+  private def fileStats(staged: DataFrame, statsCol: String,
+      bloomCol: Option[String]): Map[String, Array[Long]] = {
+    import staged.sparkSession.implicits._
+    val words = if (bloomCol.isEmpty) 0 else BLOOM_BITS / 64
+    val probes = bloomCol.fold(typedLit(Seq.empty[Long]))(b =>
+      array((0 until BLOOM_K).map(i => pmod(graft.functions.TextOps.hash64(
+        concat(lit(s"$i:"), col(b).cast("string"))),
+        lit(BLOOM_BITS.toLong))): _*))
+    staged.select(input_file_name(), col(statsCol).cast("long"), probes)
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+        rows.foreach { r =>
+          val a = acc.getOrElseUpdate(r.getString(0),
+            Array(0L, Long.MaxValue, Long.MinValue) ++ new Array[Long](words))
+          a(0) += 1
+          if (!r.isNullAt(1)) {
+            a(1) = math.min(a(1), r.getLong(1))
+            a(2) = math.max(a(2), r.getLong(1))
+          }
+          r.getSeq[java.lang.Long](2).foreach { p =>
+            if (p ne null) a(3 + (p / 64).toInt) |= 1L << (p % 64)
+          }
+        }
+        acc.iterator
+      }.collect()
+      .groupMapReduce(_._1)(_._2)((a, b) => Array.tabulate(a.length) {
+        case 0 => a(0) + b(0)
+        case 1 => math.min(a(1), b(1))
+        case 2 => math.max(a(2), b(2))
+        case i => a(i) | b(i)
+      })
+      .map { case (f, a) =>
+        val local = new File(new java.net.URI(f).getPath)
+        (local.getParentFile.getName + "/" + local.getName) -> a
       }
-      val local = new File(new java.net.URI(f).getPath)
-      (local.getParentFile.getName + "/" + local.getName) -> hex.toString
-    }
   }
+
+  /** A file's bloom words as the manifest's hex ("" = no bloom):
+    * [[BLOOM_BITS]]/4 hex chars, bit i ⇔ hex nibble i/4, bit i%4 —
+    * LITTLE-endian nibbles so probe math is index-only. */
+  private def bloomHex(words: Array[Long]): String =
+    if (words.isEmpty) ""
+    else (0 until BLOOM_BITS / 4).map(i =>
+      Integer.toHexString(((words(i / 16) >>> ((i % 16) * 4)) & 0xfL).toInt))
+      .mkString
 
   /** Read version `v` restricted to files whose BLOOM possibly
     * contains `key` — the point-lookup planner: a key scattered
@@ -377,12 +397,8 @@ object SnapshotTable {
     Files.createDirectories(target.getParent)
     val tmp = target.resolveSibling(
       s".v$v-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val body = (files.map(e => s"${e.rel}\t${e.min}\t${e.max}\t${e.rows}\t" +
-      (if (e.bloom.isEmpty) "-" else e.bloom)) ++
-      deletes.map(e => s"D\t${e.rel}\t${e.min}\t${e.max}\t${e.rows}") ++
-      batchId.map(b => s"B\t$b").toSeq)
-      .mkString("\n")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, manifestBody(files, deletes, batchId)
+      .getBytes(StandardCharsets.UTF_8))
     try Files.createLink(target, tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -391,6 +407,15 @@ object SnapshotTable {
     }
     Files.deleteIfExists(tmp): Unit
   }
+
+  /** A manifest's text: data lines, `D` delete lines, the `B` token
+    * and any `extra` meta lines. */
+  private def manifestBody(files: Seq[FileEntry], deletes: Seq[FileEntry],
+      batchId: Option[Long], extra: Seq[String] = Nil): String =
+    (files.map(e => s"${e.rel}\t${e.min}\t${e.max}\t${e.rows}\t" +
+      (if (e.bloom.isEmpty) "-" else e.bloom)) ++
+      deletes.map(e => s"D\t${e.rel}\t${e.min}\t${e.max}\t${e.rows}") ++
+      batchId.map(b => s"B\t$b") ++ extra).mkString("\n")
 
   /** [[commitManifest]], reclaiming this attempt's freshly staged
     * files on conflict (they are referenced by no manifest — left
@@ -434,6 +459,69 @@ object SnapshotTable {
     1
   }
 
+  /** A rewrite staged as commit `v + 1`: the new manifest's data
+    * entries, the staged files (reclaimed on a lost race), the delete
+    * masks riding on, and the rewritten frame's DDL. */
+  private case class Rewrite(files: Seq[FileEntry], staged: Seq[FileEntry],
+      dels: Seq[FileEntry], ddl: String)
+
+  /** The partition rewrite of [[upsertPartition]], [[ingestCommit]],
+    * [[mergeCommit]] and [[stageBranch]], in at most four Spark jobs:
+    *  1. the partitions `changes` touches, as per-task distinct values
+    *     merged on the driver (no shuffle); an empty set is an empty
+    *     batch: None, and nothing is written;
+    *  2. one exchange on `keyCol` computing whether any change row
+    *     carries the key (its map stage), then 3. the write: a base row
+    *     stays iff its key is null or no change row shares it — the
+    *     left-anti join plus `unionByName`, without a join (so no
+    *     sort-merge join, no runtime broadcast). With `opCol`, every
+    *     change row removes its key and `"D"` rows are not written;
+    *  4. [[stageFiles]]' stats pass.
+    * The base is the touched partitions' VISIBLE rows (delete masks
+    * fold in; the new files' higher sequence ends their reach), and a
+    * feed column the base lacks null-fills it (SCHEMA EVOLUTION; v+1's
+    * DDL null-fills untouched files at read time). A feed landing only
+    * in NEW partitions appends, unless `mustReplace`. */
+  private def rewrite(path: String, v: Int, changes: DataFrame,
+      opCol: Option[String], partCol: String, keyCol: String,
+      statsCol: String, bloomCol: Option[String],
+      mustReplace: Boolean = false): Option[Rewrite] = {
+    val prev = manifest(path, v)
+    val dels = deleteManifest(path, v)
+    val affected = changes.select(col(partCol).cast("string"))
+      .mapPartitions(_.map(_.getString(0)).toSet.iterator)(Encoders.STRING)
+      .collect().map(p => s"$partCol=$p").toSet
+    val (replaced, kept) = prev.partition(e => affected(e.rel.split("/").head))
+    require(!mustReplace || replaced.nonEmpty,
+      "delta touches no existing partition")
+    Option.when(affected.nonEmpty) {
+      val (chg, hit, op) = ("_graft_change", "_graft_hit", "_graft_op")
+      val feed = opCol.fold(changes)(c => changes.withColumn(op, col(c)).drop(c))
+      val upsert = opCol.fold(lit(true))(_ => col(op) =!= "D")
+      val merged =
+        if (replaced.isEmpty) feed.filter(upsert).drop(op)
+        else visibleRows(changes.sparkSession, path, replaced, dels, keyCol,
+            versionSchema(path, v))
+          .withColumn(chg, lit(false))
+          .unionByName(feed.withColumn(chg, lit(true)),
+            allowMissingColumns = true)
+          .withColumn(hit, max(col(chg)).over(Window.partitionBy(col(keyCol))))
+          .filter(col(chg) && upsert ||
+            !col(chg) && (col(keyCol).isNull || !col(hit)))
+          .drop(chg, hit, op)
+      val staged = stageFiles(merged, path, partCol, statsCol, v + 1, bloomCol)
+      Rewrite((kept ++ staged).sortBy(_.rel), staged, dels, merged.schema.toDDL)
+    }
+  }
+
+  /** Publish `r` as version `v + 1` carrying `batchId`. */
+  private def publish(path: String, v: Int, r: Rewrite,
+      batchId: Option[Long]): Int = {
+    commitManifestOrClean(path, v + 1, r.files, r.staged, r.dels, batchId)
+    commitSchema(path, v + 1, r.ddl)
+    v + 1
+  }
+
   /** Upsert commit: rows of `delta` replace same-`keyCol` rows in the
     * partitions the delta touches; every other partition's files
     * carry over by reference (stats included). Returns the new
@@ -443,32 +531,8 @@ object SnapshotTable {
       bloomCol: Option[String] = None): Int = retryOnConflict {
     val v = currentVersion(path)
     require(v > 0, s"$path has no initial commit")
-    // layout-sized by design: partition values are the directory
-    // fan-out (the cowUpsertByPartition argument)
-    val affected = delta.select(col(partCol).cast("string")).distinct()
-      .collect().map(r => s"$partCol=${r.getString(0)}").toSet
-    val prev = manifest(path, v)
-    val dels = deleteManifest(path, v)
-    val (replaced, kept) = prev.partition(e => affected(e.rel.split("/").head))
-    require(replaced.nonEmpty, "delta touches no existing partition")
-    // the rewrite applies any delete masks whose sequence reaches the
-    // rewritten files, so the merged output is the VISIBLE rows; the
-    // new files' higher sequence then ends those masks' reach
-    val base = visibleRows(spark, path, replaced, dels, keyCol,
-      versionSchema(path, v))
-    // allowMissingColumns = SCHEMA EVOLUTION: a delta carrying a new
-    // column null-fills the rewritten base rows; files outside the
-    // touched partitions never move, and v(N)'s committed DDL
-    // null-fills them at read time
-    val merged = base
-      .join(delta.select(col(keyCol)), Seq(keyCol), "left_anti")
-      .unionByName(delta, allowMissingColumns = true)
-    val newFiles = stageFiles(merged, path, partCol, statsCol, v + 1,
-      bloomCol)
-    commitManifestOrClean(path, v + 1, (kept ++ newFiles).sortBy(_.rel),
-      newFiles, dels, batchId = carriedBatchId(path))
-    commitSchema(path, v + 1, merged.schema.toDDL)
-    v + 1
+    publish(path, v, rewrite(path, v, delta, None, partCol, keyCol, statsCol,
+      bloomCol, mustReplace = true).get, carriedBatchId(tokenAt(path, v)))
   }
 
   /** STREAMING-INGEST commit: upsert `delta` tagged with the
@@ -479,33 +543,25 @@ object SnapshotTable {
     * a foreachBatch crash-and-retry the table is as if the batch
     * ran once). Unlike [[upsertPartition]], a delta landing entirely
     * in NEW partitions appends (the common streaming-arrival case —
-    * a new day/month opens a new partition). Designed for
+    * a new day/month opens a new partition), and an empty delta
+    * commits nothing and returns the current version. Designed for
     * `writeStream.foreachBatch((df, id) => ingestCommit(..., id))`. */
   def ingestCommit(spark: SparkSession, path: String, delta: DataFrame,
       partCol: String, keyCol: String, statsCol: String, batchId: Long,
-      bloomCol: Option[String] = None): Int = retryOnConflict {
+      bloomCol: Option[String] = None): Int =
+    ingestBatch(path, delta, partCol, keyCol, statsCol, batchId, bloomCol)
+      .getOrElse(currentVersion(path))
+
+  /** [[ingestCommit]], None when `delta` is empty (nothing committed);
+    * a replay is Some(current version). */
+  private[graft] def ingestBatch(path: String, delta: DataFrame,
+      partCol: String, keyCol: String, statsCol: String, batchId: Long,
+      bloomCol: Option[String]): Option[Int] = retryOnConflict {
     val v = currentVersion(path)
     require(v > 0, s"$path has no initial commit")
-    if (batchId <= lastBatchId(path)) v // replay → no-op
-    else {
-      val affected = delta.select(col(partCol).cast("string")).distinct()
-        .collect().map(r => s"$partCol=${r.getString(0)}").toSet
-      val prev = manifest(path, v)
-      val dels = deleteManifest(path, v)
-      val (replaced, kept) = prev.partition(e => affected(e.rel.split("/").head))
-      val merged =
-        if (replaced.isEmpty) delta // pure append: new partitions only
-        else visibleRows(spark, path, replaced, dels, keyCol,
-            versionSchema(path, v))
-          .join(delta.select(col(keyCol)), Seq(keyCol), "left_anti")
-          .unionByName(delta, allowMissingColumns = true)
-      val newFiles = stageFiles(merged, path, partCol, statsCol, v + 1,
-        bloomCol)
-      commitManifestOrClean(path, v + 1, (kept ++ newFiles).sortBy(_.rel),
-        newFiles, dels, batchId = carriedBatchId(path, Some(batchId)))
-      commitSchema(path, v + 1, merged.schema.toDDL)
-      v + 1
-    }
+    if (batchId <= tokenAt(path, v)) Some(v) // replay → no-op
+    else rewrite(path, v, delta, None, partCol, keyCol, statsCol, bloomCol)
+      .map(publish(path, v, _, Some(batchId)))
   }
 
   private def readFiles(spark: SparkSession, path: String,
@@ -583,9 +639,9 @@ object SnapshotTable {
     val commit = v + 1
     val stage = new File(s"$path/_stage_${commit}_" +
       java.util.UUID.randomUUID().toString.take(8))
-    keys.select(col(keyCol)).distinct().coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    val stats = spark.read.parquet(stage.toString)
+    val written = keys.select(col(keyCol)).distinct()
+    written.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    val stats = spark.read.schema(written.schema).parquet(stage.toString)
       .agg(min(col(keyCol)).cast("long"), max(col(keyCol)).cast("long"),
         count(lit(1))).collect()(0)
     val destDir = new File(s"${filesDir(path)}/_delete")
@@ -599,7 +655,8 @@ object SnapshotTable {
     }
     FileUtils.deleteQuietly(stage)
     commitManifestOrClean(path, commit, manifest(path, v), entries,
-      deleteManifest(path, v) ++ entries, batchId = carriedBatchId(path))
+      deleteManifest(path, v) ++ entries,
+      batchId = carriedBatchId(tokenAt(path, v)))
     versionSchema(path, v).foreach(commitSchema(path, commit, _))
     commit
   }
@@ -696,7 +753,7 @@ object SnapshotTable {
       val liveDels = dels.filter(d => kept.exists(e =>
         seqOf(e) < seqOf(d) && d.max >= e.min && d.min <= e.max))
       commitManifestOrClean(path, v + 1, (kept ++ newFiles).sortBy(_.rel),
-        newFiles, liveDels, batchId = carriedBatchId(path))
+        newFiles, liveDels, batchId = carriedBatchId(tokenAt(path, v)))
       versionSchema(path, v).foreach(commitSchema(path, v + 1, _))
       v + 1
     }
@@ -883,32 +940,15 @@ object SnapshotTable {
       batchId: Option[Long] = None): Int = retryOnConflict {
     val v = currentVersion(path)
     require(v > 0, s"$path has no initial commit")
+    val last = tokenAt(path, v)
     // exactly-once under streaming replay: the batch id rides IN the
     // manifest (the ingestCommit token pattern), so a foreachBatch
-    // crash-and-retry of a committed changelog batch is a no-op
-    if (batchId.exists(_ <= lastBatchId(path))) v
-    else {
-      val affected = changes.select(col(partCol).cast("string")).distinct()
-        .collect().map(r => s"$partCol=${r.getString(0)}").toSet
-      val prev = manifest(path, v)
-      val dels = deleteManifest(path, v)
-      val (replaced, kept) = prev.partition(e => affected(e.rel.split("/").head))
-      val upserts = changes.filter(col(opCol) =!= "D").drop(opCol)
-      val merged =
-        if (replaced.isEmpty) upserts // feed lands entirely in new partitions
-        else visibleRows(spark, path, replaced, dels, keyCol,
-            versionSchema(path, v))
-          // ALL change keys leave the base — updates re-enter from the
-          // feed, deletes simply don't
-          .join(changes.select(col(keyCol)), Seq(keyCol), "left_anti")
-          .unionByName(upserts, allowMissingColumns = true)
-      val newFiles = stageFiles(merged, path, partCol, statsCol, v + 1,
+    // crash-and-retry of a committed changelog batch is a no-op; an
+    // empty feed commits nothing either
+    if (batchId.exists(_ <= last)) v
+    else rewrite(path, v, changes, Some(opCol), partCol, keyCol, statsCol,
         bloomCol)
-      commitManifestOrClean(path, v + 1, (kept ++ newFiles).sortBy(_.rel),
-        newFiles, dels, batchId = carriedBatchId(path, batchId))
-      commitSchema(path, v + 1, merged.schema.toDDL)
-      v + 1
-    }
+      .fold(v)(publish(path, v, _, carriedBatchId(last, batchId)))
   }
 
   // ---- write-audit-publish branches ---------------------------------
@@ -917,10 +957,6 @@ object SnapshotTable {
     Paths.get(s"$path/manifests/branch-$name.txt")
   private def branchSchemaFile(path: String, name: String) =
     Paths.get(s"$path/manifests/branch-$name.schema.txt")
-
-  private def readLinesAt(file: java.nio.file.Path): Seq[Array[String]] =
-    Files.readAllLines(file, StandardCharsets.UTF_8)
-      .asScala.toSeq.filter(_.nonEmpty).map(_.split("\t"))
 
   /** Every currently-staged branch name (manifest listing; schema
     * side-files excluded — the dropBranch gotcha). */
@@ -934,19 +970,10 @@ object SnapshotTable {
   private def branchEntries(path: String, branch: String)
       : (Seq[FileEntry], Seq[FileEntry], Int) = {
     val lines = readLinesAt(branchManifestFile(path, branch))
-    val data = lines.collect {
-      case p if p(0) != "D" && p(0) != "B" && p(0) != "S" =>
-        FileEntry(p(0), p(1).toLong, p(2).toLong, p(3).toLong,
-          if (p.length > 4 && p(4) != "-") p(4) else "")
-    }
-    val dels = lines.collect {
-      case p if p(0) == "D" => FileEntry(p(1), p(2).toLong, p(3).toLong,
-        p(4).toLong)
-    }
     val stagedAt = lines.collectFirst {
       case p if p(0) == "S" => p(1).toInt
     }.getOrElse(sys.error(s"branch $branch has no staging provenance"))
-    (data, dels, stagedAt)
+    (dataEntries(lines), deleteEntries(lines), stagedAt)
   }
 
   /** Stage an upsert as a BRANCH (Iceberg's write-audit-publish /
@@ -967,45 +994,21 @@ object SnapshotTable {
       bloomCol: Option[String] = None): Unit = {
     val v = currentVersion(path)
     require(v > 0, s"$path has no initial commit")
-    val affected = delta.select(col(partCol).cast("string")).distinct()
-      .collect().map(r => s"$partCol=${r.getString(0)}").toSet
-    val prev = manifest(path, v)
-    val dels = deleteManifest(path, v)
-    val (replaced, kept) = prev.partition(e => affected(e.rel.split("/").head))
-    val merged =
-      if (replaced.isEmpty) delta
-      else visibleRows(spark, path, replaced, dels, keyCol,
-          versionSchema(path, v))
-        .join(delta.select(col(keyCol)), Seq(keyCol), "left_anti")
-        .unionByName(delta, allowMissingColumns = true)
-    val newFiles = stageFiles(merged, path, partCol, statsCol, v + 1,
-      bloomCol)
-    val files = (kept ++ newFiles).sortBy(_.rel)
+    // an empty delta stages a branch equal to main at v
+    val r = rewrite(path, v, delta, None, partCol, keyCol, statsCol, bloomCol)
+      .getOrElse(Rewrite(manifest(path, v), Nil, deleteManifest(path, v),
+        versionSchema(path, v).getOrElse(delta.schema.toDDL)))
     val target = branchManifestFile(path, branch)
     Files.createDirectories(target.getParent)
-    // carry the exactly-once batch-id token into the branch manifest:
-    // publishBranch links it VERBATIM as the next version, and if
-    // retention then expires every earlier manifest the published one
-    // must still hold the running max or a replayed streaming batch
-    // would re-commit (publish refuses when main advanced past the
-    // staging version, so the stage-time max IS the publish-time max)
-    val body = (files.map(e => s"${e.rel}\t${e.min}\t${e.max}\t${e.rows}\t" +
-      (if (e.bloom.isEmpty) "-" else e.bloom)) ++
-      dels.map(e => s"D\t${e.rel}\t${e.min}\t${e.max}\t${e.rows}") ++
-      carriedBatchId(path).map(b => s"B\t$b").toSeq ++
-      Seq(s"S\t$v")).mkString("\n")
+    // the branch carries the batch-id token: publishBranch links it
+    // VERBATIM as v + 1 (and refuses if main moved past v), so the
+    // published manifest holds the running max retention relies on
+    val body = manifestBody(r.files, r.dels,
+      carriedBatchId(tokenAt(path, v)), Seq(s"S\t$v"))
     val tmp = target.resolveSibling(s".branch-$branch.tmp")
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    commitSchemaAt(branchSchemaFile(path, branch), merged.schema.toDDL)
-  }
-
-  private def commitSchemaAt(target: java.nio.file.Path,
-      ddl: String): Unit = {
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
-    Files.write(tmp, ddl.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    commitSchemaAt(branchSchemaFile(path, branch), r.ddl)
   }
 
   /** Read a staged branch's contents (merge-on-read, like
@@ -1014,13 +1017,8 @@ object SnapshotTable {
   def readBranch(spark: SparkSession, path: String, branch: String,
       keyCol: String): DataFrame = {
     val (data, dels, _) = branchEntries(path, branch)
-    val schema = {
-      val f = branchSchemaFile(path, branch)
-      if (Files.exists(f))
-        Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
-      else None
-    }
-    visibleRows(spark, path, data, dels, keyCol, schema)
+    visibleRows(spark, path, data, dels, keyCol,
+      readText(branchSchemaFile(path, branch)))
   }
 
   /** PUBLISH a staged branch: one atomic CREATE-EXCLUSIVE link of the
@@ -1112,7 +1110,7 @@ object SnapshotTable {
       bloomCol)
     commitManifestOrClean(path, v + 1,
       (manifest(path, v) ++ newFiles).sortBy(_.rel), newFiles,
-      deleteManifest(path, v), batchId = carriedBatchId(path))
+      deleteManifest(path, v), batchId = carriedBatchId(tokenAt(path, v)))
     // the committed DDL stays the DATA schema; partition columns are
     // path-recovered per spec group at read time
     versionSchema(path, v).foreach(commitSchema(path, v + 1, _))

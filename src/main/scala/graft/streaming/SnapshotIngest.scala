@@ -17,8 +17,10 @@ import graft.sources.SnapshotTable
   *
   * `foreachBatch` is the right seam (the PipelineStream argument):
   * an upsert against a moving table must re-plan per batch, and the
-  * commit protocol is driver-side metadata work bracketing one
-  * distributed stage+stats pass per batch. New partitions append;
+  * commit protocol is driver-side metadata work bracketing the
+  * table's four-job partition rewrite per batch (partition set, keyed
+  * merge's map stage, write, stats pass). An empty batch is an empty
+  * partition set and commits nothing. New partitions append;
   * existing ones merge-on-write with the version's schema (so
   * schema-evolving producers compose — q68's rules apply per
   * commit). */
@@ -34,9 +36,8 @@ object SnapshotIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          SnapshotTable.ingestCommit(batch.sparkSession, path, batch,
-            partCol, keyCol, statsCol, id, bloomCol): Unit
+        SnapshotTable.ingestCommit(batch.sparkSession, path, batch,
+          partCol, keyCol, statsCol, id, bloomCol): Unit
       }
       .start()
 
@@ -56,10 +57,9 @@ object SnapshotIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          SnapshotTable.mergeCommit(batch.sparkSession, path, batch,
-            opCol, partCol, keyCol, statsCol, bloomCol,
-            batchId = Some(id)): Unit
+        SnapshotTable.mergeCommit(batch.sparkSession, path, batch,
+          opCol, partCol, keyCol, statsCol, bloomCol,
+          batchId = Some(id)): Unit
       }
       .start()
 
@@ -81,9 +81,9 @@ object SnapshotIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          SnapshotTable.ingestCommit(batch.sparkSession, path, batch,
-            partCol, keyCol, statsCol, id, bloomCol)
+        // None = an empty batch: no commit, so no maintenance
+        SnapshotTable.ingestBatch(path, batch, partCol, keyCol, statsCol,
+          id, bloomCol).foreach { _ =>
           graft.sources.TableMaintenance.runOnce(batch.sparkSession, path,
             partCol, keyCol, statsCol, policy, bloomCol): Unit
         }

@@ -155,15 +155,7 @@ class EtlCycleShapeSpec extends SparkSpec {
   import TestSinks._
 
   test("runOnce plans no broadcast exchange and runs at most 3 Spark jobs") {
-    import java.util.concurrent.ConcurrentLinkedQueue
-    import java.util.concurrent.atomic.AtomicInteger
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.graftbus.Bus
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
-    import org.apache.spark.sql.util.QueryExecutionListener
     val s = spark
     import s.implicits._
     val rows = (0 until 60).map(i => IocRow(s"qh${i % 3}",
@@ -184,40 +176,17 @@ class EtlCycleShapeSpec extends SparkSpec {
         def fetch(id: Long) = s"<p>$id</p>"
       }
     }
-    val sc = spark.sparkContext
-    val execs = new ConcurrentLinkedQueue[QueryExecution]()
-    val jobs = new AtomicInteger
-    val qel = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = execs.add(qe)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = execs.add(qe)
-    }
-    val sl = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
     val tips = new RecordingTipSink
-    Bus.drain(sc)
-    spark.listenerManager.register(qel)
-    sc.addSparkListener(sl)
-    val report =
-      try Runner.runOnce(spark, src, PipelineConfig(),
+    val (report, jobs, plans) = PlanShape.capture(spark) {
+      Runner.runOnce(spark, src, PipelineConfig(),
         new RecordingIntelSink(maxAccepted = Int.MaxValue), tips)
-      finally {
-        Bus.drain(sc)
-        spark.listenerManager.unregister(qel)
-        sc.removeSparkListener(sl)
-      }
+    }
     assert(report.iocOk && report.bulletinsOk, report.toString)
     assert(report.bulletinWrites == ((20L, 0L)))
     assert(tips.posts.size == 10 && tips.patches.map(_._1).sorted ==
       (2 to 20 by 2).map(1000L + _).toList)
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case other => other +: other.children.flatMap(nodes)
-    }
-    val broadcasts = execs.asScala.toSeq.flatMap(qe => nodes(qe.executedPlan))
-      .collect { case b: BroadcastExchangeLike => b.nodeName }
+    val broadcasts = plans.collect { case b: BroadcastExchangeLike => b.nodeName }
     assert(broadcasts.isEmpty, s"cycle plans broadcast: $broadcasts")
-    assert(jobs.get <= 3, s"cycle ran ${jobs.get} Spark jobs, expected at most 3")
+    assert(jobs <= 3, s"cycle ran $jobs Spark jobs, expected at most 3")
   }
 }

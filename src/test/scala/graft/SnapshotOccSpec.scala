@@ -324,4 +324,26 @@ class SnapshotOccSpec extends SparkSpec {
     assert(SnapshotTable.currentVersion(path) == 2)
     assert(SnapshotTable.readVersion(spark, path, 2).count() == n2)
   }
+
+  test("occ: a replayed batch is a no-op once retention keeps only the latest version") {
+    val path = freshTable()
+    def batch(v: Int) = SnapshotTable.readVersion(spark, path, v)
+      .filter($"om" === "1995-01")
+      .withColumn("om", lit("2099-01"))
+      .withColumn("o_orderkey", $"o_orderkey" + 900000000L)
+    assert(SnapshotTable.ingestCommit(spark, path, batch(1),
+      "om", "o_orderkey", "o_orderkey", batchId = 5L) == 2)
+    // a later non-ingest commit carries the token forward
+    val v3 = SnapshotTable.upsertPartition(spark, path,
+      SnapshotTable.readVersion(spark, path, 2).filter($"om" === "1995-02")
+        .withColumn("o_totalprice", $"o_totalprice" + 1.0),
+      "om", "o_orderkey", "o_orderkey")
+    SnapshotTable.expireVersions(spark, path, v3)
+    assert(SnapshotTable.liveVersions(path) == Seq(v3))
+    assert(SnapshotTable.lastBatchId(path) == 5L)
+    for (id <- Seq(5L, 4L))
+      assert(SnapshotTable.ingestCommit(spark, path, batch(v3),
+        "om", "o_orderkey", "o_orderkey", batchId = id) == v3)
+    assert(SnapshotTable.currentVersion(path) == v3)
+  }
 }
