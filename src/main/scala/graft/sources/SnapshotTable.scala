@@ -9,6 +9,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Minimal manifest-committed table format with snapshot isolation,
   * time travel, and FILE-LEVEL STATS PRUNING — the metadata layer
@@ -196,10 +197,10 @@ object SnapshotTable {
 
   /** Stage `df` partitioned by `partCol`, collect per-file stats on
     * `statsCol` (and blooms on `bloomCol`) in one pass over the staged
-    * files ([[fileStats]], read back with `df`'s schema, so no schema
-    * inference job), then move the part-files into the shared `files/`
-    * tree under commit-tagged names. Returns the new files' manifest
-    * entries. */
+    * files ([[fileStats]], read back by their listed paths with `df`'s
+    * schema: no second listing, no schema inference job), then move the
+    * part-files into the shared `files/` tree under commit-tagged names.
+    * Returns the new files' manifest entries. */
   private def stageFiles(df: DataFrame, path: String, partCol: String,
       statsCol: String, commit: Int,
       bloomCol: Option[String] = None): Seq[FileEntry] = {
@@ -216,8 +217,8 @@ object SnapshotTable {
     val parts = FileFormats.listPartFiles(stage)
     val stats =
       if (parts.isEmpty) Map.empty[String, Array[Long]]
-      else fileStats(df.sparkSession.read.schema(df.schema)
-        .parquet(stage.toString), statsCol, bloomCol)
+      else fileStats(readUnder(df.sparkSession, stage.toString,
+        parts.map(_.toString), Some(df.schema)), statsCol, bloomCol)
     val moved = parts.map { f =>
       val partDir = f.getParentFile.getName // partCol=value
       val destDir = new File(s"${filesDir(path)}/$partDir")
@@ -565,7 +566,14 @@ object SnapshotTable {
   }
 
   private def readFiles(spark: SparkSession, path: String,
-      rel: Seq[String], schema: Option[String] = None): DataFrame = {
+      rel: Seq[String], schema: Option[String] = None): DataFrame =
+    readUnder(spark, filesDir(path), rel.map(f => s"${filesDir(path)}/$f"),
+      schema.map(StructType.fromDDL))
+
+  /** `files` by explicit path, partition columns resolved from the
+    * directories below `base` (whose name may start with `_`). */
+  private def readUnder(spark: SparkSession, base: String,
+      files: Seq[String], schema: Option[StructType]): DataFrame = {
     // Manifest-planned scans must not pay a CLUSTER JOB to re-list
     // paths the manifest already enumerates: with the default
     // parallelPartitionDiscovery.threshold (32), every version read
@@ -587,9 +595,8 @@ object SnapshotTable {
     val saved = spark.conf.get(thresholdKey)
     spark.conf.set(thresholdKey, "100000")
     try {
-      val r0 = spark.read.option("basePath", filesDir(path))
-      val r = schema.fold(r0)(r0.schema)
-      r.parquet(rel.map(f => s"${filesDir(path)}/$f"): _*)
+      val r0 = spark.read.option("basePath", base)
+      schema.fold(r0)(r0.schema).parquet(files: _*)
     } finally spark.conf.set(thresholdKey, saved)
   }
 
@@ -641,12 +648,14 @@ object SnapshotTable {
       java.util.UUID.randomUUID().toString.take(8))
     val written = keys.select(col(keyCol)).distinct()
     written.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    val stats = spark.read.schema(written.schema).parquet(stage.toString)
+    val parts = FileFormats.listPartFiles(stage)
+    val stats = readUnder(spark, stage.toString, parts.map(_.toString),
+        Some(written.schema))
       .agg(min(col(keyCol)).cast("long"), max(col(keyCol)).cast("long"),
         count(lit(1))).collect()(0)
     val destDir = new File(s"${filesDir(path)}/_delete")
     destDir.mkdirs()
-    val entries = FileFormats.listPartFiles(stage).map { f =>
+    val entries = parts.map { f =>
       val name = s"c$commit-${f.getName.stripPrefix("part-")}"
       Files.move(f.toPath, new File(destDir, name).toPath,
         StandardCopyOption.ATOMIC_MOVE)
