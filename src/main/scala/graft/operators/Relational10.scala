@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.CheckpointOps
 import graft.functions.TextOps.{sqlHash64, sqlHash64Seeded, sqlTokens}
 import graft.functions.NativeKernels.word_tokens
 
@@ -330,20 +331,27 @@ object Relational10 extends graft.QueryModule {
   }
 
   def d14(s: SparkSession, dir: String,
-      pairsIn: Option[DataFrame] = None): DataFrame = {
+      pairsIn: Option[DataFrame] = None): DataFrame =
+    incrementalClusters(s, dir, pairsIn.getOrElse(Dedup.d02(s, dir)), "doc_id")
+
+  /** The d14/d16 body over a near-dup pair source, labelled by `idCol`:
+    * the old corpus is clustered first (frozen round-N−1 state, what
+    * a real pipeline reads), then the new batch merges in through
+    * [[mergeIncrement]]. */
+  private def incrementalClusters(s: SparkSession, dir: String,
+      pairsAll: DataFrame, idCol: String): DataFrame = {
     import s.implicits._
-    val pairs = pairsIn.getOrElse(Dedup.d02(s, dir)).select($"a_id", $"b_id")
+    val pairs = pairsAll.select($"a_id", $"b_id")
     val oldPairs = pairs.filter(!isNewDoc($"a_id") && !isNewDoc($"b_id"))
     val newPairs = pairs.filter(isNewDoc($"a_id") || isNewDoc($"b_id"))
-    // old-corpus cluster state (a real pipeline reads this, round N-1)
     val oldLabels = Relational4.d09(s, dir, pairsIn = Some(oldPairs))
       .select($"doc_id".as("id"), $"cluster_id".as("comp"))
     val labels = mergeIncrement(s, newPairs, oldLabels)
-      .select($"id".as("doc_id"), $"comp".as("cluster_id"))
+      .select($"id".as(idCol), $"comp".as("cluster_id"))
     val sizes = labels.groupBy($"cluster_id").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("cluster_id"))
-      .select($"doc_id", $"cluster_id", $"cluster_size")
-      .orderBy($"doc_id")
+      .select(col(idCol), $"cluster_id", $"cluster_size")
+      .orderBy(col(idCol))
   }
 
   // ---- d16: incremental SEMANTIC cluster maintenance ----------------
@@ -368,21 +376,9 @@ object Relational10 extends graft.QueryModule {
     * The registered form reads the slot-cached pair table (the d14
     * precedent) so its bench cost is the merge cost. */
   def d16(s: SparkSession, dir: String,
-      pairsIn: Option[DataFrame] = None): DataFrame = {
-    import s.implicits._
-    val pairs = pairsIn.getOrElse(Similarity.d08Pairs(s, dir))
-      .select($"a_id", $"b_id")
-    val oldPairs = pairs.filter(!isNewDoc($"a_id") && !isNewDoc($"b_id"))
-    val newPairs = pairs.filter(isNewDoc($"a_id") || isNewDoc($"b_id"))
-    val oldLabels = Relational4.d09(s, dir, pairsIn = Some(oldPairs))
-      .select($"doc_id".as("id"), $"cluster_id".as("comp"))
-    val labels = mergeIncrement(s, newPairs, oldLabels)
-      .select($"id".as("vec_id"), $"comp".as("cluster_id"))
-    val sizes = labels.groupBy($"cluster_id").agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, Seq("cluster_id"))
-      .select($"vec_id", $"cluster_id", $"cluster_size")
-      .orderBy($"vec_id")
-  }
+      pairsIn: Option[DataFrame] = None): DataFrame =
+    incrementalClusters(s, dir,
+      pairsIn.getOrElse(Similarity.d08Pairs(s, dir)), "vec_id")
 
   private val embPairCache = Materialized[DataFrame]()
 
@@ -494,17 +490,19 @@ object Relational10 extends graft.QueryModule {
   private def bpeRun(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], Seq[(Long, Long)]) = {
     import s.implicits._
-    var words = t(s, dir, "documents")
+    val words0 = t(s, dir, "documents")
       .select(explode(word_tokens($"text")).as("w"))
       .groupBy($"w").agg(count(lit(1)).as("freq"))
       .select(split($"w", "").as("sym"), $"freq")
       .localCheckpoint()
-    def totalSymbols: Long = words
+    def totalSymbols(words: DataFrame): Long = words
       .agg(sum($"freq" * size($"sym"))).head().getLong(0)
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     val totals = Seq.newBuilder[(Long, Long)]
-    totals += ((0L, totalSymbols))
-    for (step <- 1 to BPE_STEPS) {
+    // each step records the total of the vocabulary it starts from
+    // (step 1: the untrained one), the final total after the loop
+    val words = CheckpointOps.rounds(words0, BPE_STEPS) { (words, step) =>
+      totals += ((step - 1L, totalSymbols(words)))
       val top = words
         .select($"freq", explode(symPairs($"sym")).as("p"))
         .filter($"p.a" =!= $"p.b")
@@ -514,16 +512,10 @@ object Relational10 extends graft.QueryModule {
         .limit(1).collect()(0)
       val (a, b, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
       merges += ((step, a, b, cnt))
-      val next = words
-        .select(applyMerge($"sym", a, b).as("sym"), $"freq")
-        .localCheckpoint()
-      // real block release — Dataset.unpersist would be a plan-cache
-      // no-op on a local checkpoint (see CheckpointOps)
-      graft.functions.CheckpointOps.freeLocalCheckpoint(words)
-      words = next
-      totals += ((step.toLong, totalSymbols))
+      words.select(applyMerge($"sym", a, b).as("sym"), $"freq")
     }
-    graft.functions.CheckpointOps.freeLocalCheckpoint(words)
+    totals += ((BPE_STEPS.toLong, totalSymbols(words)))
+    CheckpointOps.freeLocalCheckpoint(words)
     (merges.result(), totals.result())
   }
 

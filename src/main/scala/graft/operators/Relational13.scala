@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.CheckpointOps
 import graft.functions.TextOps.{hash64, sqlHash64}
 
 /** Thirteenth tranche — the incremental-ingest and sketch-sampling
@@ -406,53 +407,71 @@ object Relational13 extends graft.QueryModule {
   private[graft] def isqdL(a: Column, b: Column): Column =
     graft.functions.NativeKernels.vec_sqdist_l(a, b)
 
-  /** [[PQ_TRAIN_ITERS]] rounds of per-subspace Lloyd on the Q20 grid:
-    * assignment is the exact-integer argmin with a (dist, code) total
-    * tie-break; the update divides per-position long sums with
-    * truncating integer division (`DIV` ≡ DuckDB `//` — both
-    * truncate toward zero, so the "mean" lands on the same grid
-    * point on every engine, ≤ one Q20 ulp ≈ 1e-6 from the true
-    * centroid — noise for clustering, gold for determinism); empty
-    * codes keep their previous centroid via the left-join coalesce.
-    * This is what the s13 Scaladoc calls out as the production path
-    * ("a trained-codebook run re-trains per corpus") made ORACLE-ABLE
-    * by the s14 fixed-point discipline — double-averaged centroids
-    * are not cross-engine bit-stable, Q20-summed ones are. Per-round
-    * snapshots are checkpointed and freed (lloydIterate/d09). */
-  private[graft] def pqTrainCodebook(sub: DataFrame): DataFrame = {
-    var cb = sub.filter(col("vec_id") < PQ_K)
+  /** [[PQ_TRAIN_ITERS]] rounds of per-subspace [[lloydQ20]], seeded
+    * from the first [[PQ_K]] vectors' subspace slices. This is what
+    * the s13 Scaladoc calls out as the production path ("a
+    * trained-codebook run re-trains per corpus") made ORACLE-ABLE by
+    * the s14 fixed-point discipline — double-averaged centroids are
+    * not cross-engine bit-stable, Q20-summed ones are. */
+  private[graft] def pqTrainCodebook(sub: DataFrame): DataFrame =
+    lloydQ20(sub, sub.filter(col("vec_id") < PQ_K)
       .select(col("m"), col("vec_id").cast("int").as("code"),
-        col("sq").as("cq"))
-      .localCheckpoint()
-    for (_ <- 1 to PQ_TRAIN_ITERS) {
-      val asn = sub.join(broadcast(cb), Seq("m"))
-        .select(col("vec_id"), col("m"), col("code"),
-          isqdL(col("sq"), col("cq")).as("d"))
-        .groupBy(col("vec_id"), col("m"))
-        .agg(min(struct(col("d"), col("code"))).as("best"))
-        .select(col("vec_id"), col("m"), col("best.code").as("code"))
+        col("sq").as("cq")), Seq("m"), "code", "sq", PQ_SUB, PQ_TRAIN_ITERS)
+
+  /** Nearest centroid per point `(vec_id, key…, v)` against a
+    * centroid table `(key…, id, cq)`: the exact-long [[isqdL]]
+    * distance with a (dist, id) total tie-break, as a `min(struct)`
+    * aggregate over the broadcast centroids — never a rank window.
+    * `key` scopes the search (PQ: the subspace `m`); empty = every
+    * point against every centroid (IVF routing). Returns
+    * `(vec_id, key…, id)`. */
+  private def nearest(pts: DataFrame, cent: DataFrame, key: Seq[String],
+      id: String, v: String): DataFrame = {
+    val by = ("vec_id" +: key).map(col)
+    val pairs =
+      if (key.isEmpty) pts.crossJoin(broadcast(cent))
+      else pts.join(broadcast(cent), key)
+    pairs.select(by :+ col(id) :+ isqdL(col(v), col("cq")).as("d"): _*)
+      .groupBy(by: _*)
+      .agg(min(struct(col("d"), col(id))).as("best"))
+      .select(by :+ col(s"best.$id").as(id): _*)
+  }
+
+  /** `iters` rounds of integer Lloyd on the Q20 grid — the one
+    * trainer behind the PQ codebook (`key` = the subspace `m`,
+    * centroids `code`) and the IVF router (no key, centroids
+    * `cell`): assignment is [[nearest]]; the update divides
+    * per-position long sums of the `dim`-wide `v` vectors with
+    * truncating integer division (`DIV` ≡ DuckDB `//` — both truncate
+    * toward zero, so the "mean" lands on the same grid point on every
+    * engine, ≤ one Q20 ulp ≈ 1e-6 from the true centroid — noise for
+    * clustering, gold for determinism); a centroid that lost every
+    * point keeps its previous value via the left-join coalesce.
+    * Seeded from `seed` `(key…, id, cq)`; per-round snapshots
+    * checkpointed and freed. Each round is one broadcast-centroid
+    * argmin scan + one centroid-keyed aggregate — the points are
+    * scanned twice per round, the state is centroids × `dim`. */
+  private def lloydQ20(pts: DataFrame, seed: DataFrame, key: Seq[String],
+      id: String, v: String, dim: Int, iters: Int): DataFrame = {
+    val cell = (key :+ id).map(col)
+    CheckpointOps.rounds(seed.localCheckpoint(), iters) { (cent, _) =>
       // centroid update in ONE aggregate: per-position long sums as
-      // PQ_SUB parallel sum() columns instead of posexplode → a
-      // (m, code, pos) aggregate → a second (m, code) collect_list
-      // re-assembly (r17, guide §2.3/§2.4: the explode multiplied the
-      // shuffle rows ×PQ_SUB and the two-level groupBy paid a second
-      // exchange; the sums are the same exact longs, the DIV the same
-      // truncating division, the array order explicit by position)
-      val upd = asn.join(sub, Seq("vec_id", "m"))
-        .groupBy(col("m"), col("code"))
+      // `dim` parallel sum() columns instead of posexplode → a
+      // (cell, pos) aggregate → a second collect_list re-assembly
+      // (r17, guide §2.3/§2.4: the explode multiplied the shuffle
+      // rows ×dim and the two-level groupBy paid a second exchange;
+      // the sums are the same exact longs, the array order explicit
+      // by position)
+      val upd = nearest(pts, cent, key, id, v).join(pts, "vec_id" +: key)
+        .groupBy(cell: _*)
         .agg(count(lit(1)).as("n"),
-          array((0 until PQ_SUB).map(i =>
-            sum(element_at(col("sq"), i + 1))): _*).as("svs"))
-        .select(col("m"), col("code"),
-          transform(col("svs"), sv => call_function("div", sv, col("n")))
-            .as("ncq"))
-      val next = cb.join(upd, Seq("m", "code"), "left")
-        .select(col("m"), col("code"), coalesce(col("ncq"), col("cq")).as("cq"))
-        .localCheckpoint()
-      graft.functions.CheckpointOps.freeLocalCheckpoint(cb)
-      cb = next
+          array((0 until dim).map(i =>
+            sum(element_at(col(v), i + 1))): _*).as("svs"))
+        .select(cell :+ transform(col("svs"),
+          sv => call_function("div", sv, col("n"))).as("ncq"): _*)
+      cent.join(upd, key :+ id, "left")
+        .select(cell :+ coalesce(col("ncq"), col("cq")).as("cq"): _*)
     }
-    cb
   }
 
   /** s13's two-stage ADC retrieval with TRAINED codebooks: identical
@@ -508,11 +527,7 @@ object Relational13 extends graft.QueryModule {
       : DataFrame = {
     val s = e.sparkSession
     import s.implicits._
-    val codes = sub.join(broadcast(cb), Seq("m"))
-      .select($"vec_id", $"m", $"code", isqdL($"sq", $"cq").as("d"))
-      .groupBy($"vec_id", $"m")
-      .agg(min(struct($"d", $"code")).as("best"))
-      .select($"vec_id", $"m", $"best.code".as("code"))
+    val codes = nearest(sub, cb, Seq("m"), "code", "sq")
     val lut = sub.filter($"vec_id" < PQ_NQ)
       .select($"vec_id".as("q_id"), $"m", $"sq")
       .join(broadcast(cb), Seq("m"))
@@ -685,7 +700,7 @@ object Relational13 extends graft.QueryModule {
     * vectors (the s07/PQ_K deterministic convention — the oracle's
     * ct0 CTE replays `vec_id < IVF_CELLS`) and take
     * [[IVF_TRAIN_ITERS]] integer-Lloyd rounds on the full-dim Q20
-    * grid ([[ivfTrainCentroids]]); the fine distances use the s13t
+    * grid ([[lloydQ20]]); the fine distances use the s13t
     * trained per-subspace codebook ([[materializedTrainedPQ]] —
     * measured +10pp over seed slices). MEMBERSHIP is geometric —
     * every vector assigns to its nearest trained centroid, the
@@ -716,58 +731,8 @@ object Relational13 extends graft.QueryModule {
   private[graft] case class IvfIndex(
       e: DataFrame, cent: DataFrame, cb: DataFrame, codes: DataFrame)
 
-  // integer routing: Σ(qq−cq)² over longs — the same codegen kernel
-  // as [[isqdL]] (guide §4; identical exact-long fold)
-  private def isqdRoute(a: Column, b: Column): Column =
-    graft.functions.NativeKernels.vec_sqdist_l(a, b)
-
   private def q20(v: Column): Column =
     transform(v, x => round(x.cast("double") * Q20).cast("long"))
-
-  /** [[IVF_TRAIN_ITERS]] rounds of Lloyd on the COARSE centroids over
-    * the full-dim Q20 grid (r15 verdict #2 — the same integer-Lloyd
-    * discipline [[pqTrainCodebook]] applies per subspace, applied to
-    * the router): assignment is the exact-long argmin with a (dist,
-    * cell) total tie-break; the update divides per-position long sums
-    * with truncating `DIV` (≡ DuckDB `//`), so the trained centroids
-    * land on identical grid points on both engines; an emptied cell
-    * keeps its previous centroid via the left-join coalesce. Seeded
-    * from the first [[IVF_CELLS]] quantized vectors (r16 replaced
-    * the r15 label-mean seeds — labels are metadata, Voronoi regions
-    * are geometry), so training moves the seeds toward the data's
-    * actual cell structure. Per-round snapshots freed (lloydIterate/d09).
-    * Scale: each round is one broadcast-centroid argmin scan + one
-    * (cell, pos)-keyed aggregate — nCells·DIM state, corpus scanned
-    * twice per round. */
-  private[graft] def ivfTrainCentroids(vq: DataFrame,
-      seed: DataFrame): DataFrame = {
-    var cent = seed.localCheckpoint()
-    for (_ <- 1 to IVF_TRAIN_ITERS) {
-      val asn = vq.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("cell"),
-          isqdRoute(col("qq"), col("cq")).as("rdist"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("rdist"), col("cell"))).as("best"))
-        .select(col("vec_id"), col("best.cell").as("cell"))
-      // one-aggregate centroid update — DIM parallel per-position long
-      // sums (the pqTrainCodebook r17 fusion: same exact sums, same
-      // truncating DIV, no ×DIM explode and no second exchange)
-      val upd = asn.join(vq, Seq("vec_id"))
-        .groupBy(col("cell"))
-        .agg(count(lit(1)).as("n"),
-          array((0 until DIM).map(i =>
-            sum(element_at(col("qq"), i + 1))): _*).as("svs"))
-        .select(col("cell"),
-          transform(col("svs"), sv => call_function("div", sv, col("n")))
-            .as("ncq"))
-      val next = cent.join(upd, Seq("cell"), "left")
-        .select(col("cell"), coalesce(col("ncq"), col("cq")).as("cq"))
-        .localCheckpoint()
-      graft.functions.CheckpointOps.freeLocalCheckpoint(cent)
-      cent = next
-    }
-    cent
-  }
 
   private[graft] def ivfIndex(s: SparkSession, dir: String): IvfIndex = {
     import s.implicits._
@@ -799,23 +764,16 @@ object Relational13 extends graft.QueryModule {
     // derives the cell count from the trained table itself.
     val seed = vq.filter($"vec_id" < IVF_CELLS)
       .select($"vec_id".cast("int").as("cell"), $"qq".as("cq"))
-    val cent = ivfTrainCentroids(vq, seed)
+    // the router trains by the same integer Lloyd as the PQ codebook
+    // (r15 verdict #2), over the full-dim grid with no subspace key
+    val cent = lloydQ20(vq, seed, Nil, "cell", "qq", DIM, IVF_TRAIN_ITERS)
     // inverted-file build: every vector to its nearest TRAINED
     // centroid — min(struct) argmin (an aggregate, not a rank window)
-    val asn = vq
-      .crossJoin(broadcast(cent))
-      .select($"vec_id", $"cell", isqdRoute($"qq", $"cq").as("rdist"))
-      .groupBy($"vec_id")
-      .agg(min(struct($"rdist", $"cell")).as("best"))
-      .select($"vec_id", $"best.cell".as("cell"))
-    val codes = sub.join(broadcast(cb), Seq("m"))
-      .select($"vec_id", $"m", $"code", isqdL($"sq", $"cq").as("d"))
-      .groupBy($"vec_id", $"m")
-      .agg(min(struct($"d", $"code")).as("best"))
-      .select($"vec_id", $"m", $"best.code".as("code"))
+    val asn = nearest(vq, cent, Nil, "cell", "qq")
+    val codes = nearest(sub, cb, Seq("m"), "code", "sq")
       .join(asn, Seq("vec_id"))
       .localCheckpoint()
-    graft.functions.CheckpointOps.freeLocalCheckpoint(vq)
+    CheckpointOps.freeLocalCheckpoint(vq)
     IvfIndex(e, cent, cb, codes)
   }
 
@@ -854,7 +812,7 @@ object Relational13 extends graft.QueryModule {
     val wP = Window.partitionBy(col("q_id")).orderBy(col("rdist"), col("cell"))
     q.select(col("q_id"), q20(col("embedding")).as("qq"))
       .crossJoin(broadcast(cent))
-      .select(col("q_id"), col("cell"), isqdRoute(col("qq"), col("cq")).as("rdist"))
+      .select(col("q_id"), col("cell"), isqdL(col("qq"), col("cq")).as("rdist"))
       .withColumn("prn", row_number().over(wP))
       .filter(col("prn") <= nProbe)
       .select(col("q_id"), col("cell"))
@@ -988,16 +946,8 @@ object Relational13 extends graft.QueryModule {
     val s = ix.e.sparkSession
     import s.implicits._
     val vq = arrivals.select($"vec_id", q20($"embedding").as("qq"))
-    val asn = vq.crossJoin(broadcast(ix.cent))
-      .select($"vec_id", $"cell", isqdRoute($"qq", $"cq").as("rdist"))
-      .groupBy($"vec_id")
-      .agg(min(struct($"rdist", $"cell")).as("best"))
-      .select($"vec_id", $"best.cell".as("cell"))
-    pqSubQ(arrivals).join(broadcast(ix.cb), Seq("m"))
-      .select($"vec_id", $"m", $"code", isqdL($"sq", $"cq").as("d"))
-      .groupBy($"vec_id", $"m")
-      .agg(min(struct($"d", $"code")).as("best"))
-      .select($"vec_id", $"m", $"best.code".as("code"))
+    val asn = nearest(vq, ix.cent, Nil, "cell", "qq")
+    nearest(pqSubQ(arrivals), ix.cb, Seq("m"), "code", "sq")
       .join(asn, Seq("vec_id"))
       .select($"vec_id", $"cell", $"m", $"code")
   }

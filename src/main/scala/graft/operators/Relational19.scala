@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.CheckpointOps
 
 /** Nineteenth tranche — data-management shapes a 100 TB lake runs
   * before, during, and after every pipeline in tranches 1-18:
@@ -435,23 +436,20 @@ object Relational19 extends graft.QueryModule {
   private def khopOver(knn: DataFrame, s: SparkSession): DataFrame = {
     import s.implicits._
     val edges = knn.select($"src", $"dst").localCheckpoint()
-    var reached = edges.select($"src".as("id")).distinct()
+    val seeds = edges.select($"src".as("id")).distinct()
       .filter(pmod($"id", lit(KHOP_SEED_MOD)) === 0)
       .select($"id", lit(0L).as("hop"))
       .localCheckpoint()
-    for (_ <- 1 to KHOP_ROUNDS) {
-      val prev = reached
-      reached = prev.unionByName(
+    val reached = CheckpointOps.rounds(seeds, KHOP_ROUNDS) { (prev, _) =>
+      prev.unionByName(
           edges.join(prev, $"src" === $"id")
             .select($"dst".as("id"), ($"hop" + 1L).as("hop")))
         .groupBy($"id").agg(min($"hop").as("hop"))
-        .localCheckpoint()
-      graft.functions.CheckpointOps.freeLocalCheckpoint(prev)
     }
     // the final round's checkpoint backs the returned frame (s13t
     // convention: it stays cached); edges are superseded once the
     // last round materialized
-    graft.functions.CheckpointOps.freeLocalCheckpoint(edges)
+    CheckpointOps.freeLocalCheckpoint(edges)
     reached.select($"id".as("vec_id"), $"hop").orderBy($"vec_id")
   }
 
@@ -517,10 +515,10 @@ object Relational19 extends graft.QueryModule {
     // must survive until the caller evaluates the returned frame
     val r1 = RankOps.globalOrdinal(rfm,
       Seq($"rec_us".asc, $"user_id".asc), "r_idx").localCheckpoint()
-    graft.functions.CheckpointOps.freeLocalCheckpoint(rfm)
+    CheckpointOps.freeLocalCheckpoint(rfm)
     val r2 = RankOps.globalOrdinal(r1,
       Seq($"freq".desc, $"user_id".asc), "f_idx").localCheckpoint()
-    graft.functions.CheckpointOps.freeLocalCheckpoint(r1)
+    CheckpointOps.freeLocalCheckpoint(r1)
     val ranked = RankOps.globalOrdinal(r2,
       Seq($"cents".desc, $"user_id".asc), "m_idx")
     ranked

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.CheckpointOps
 
 /** Twenty-second tranche — RETRACTABLE join-view maintenance: the
   * signed-multiplicity delta algebra (DBSP / differential-dataflow
@@ -86,17 +87,12 @@ object Relational22 extends graft.QueryModule {
     // parallelism instead of the scan's split count (a bench-SF
     // lineitem file is floored at ~5 splits by openCostInBytes, and a
     // checkpoint freezes that width for every consumer).
-    val p = s.sessionState.conf.numShufflePartitions
-    val o = t(s, dir, "orders").select(
+    val o = CheckpointOps.pin(t(s, dir, "orders").select(
       guardedKey($"o_orderkey", "q81").as("o_orderkey"), $"o_orderpriority",
-      year($"o_orderdate").cast("long").as("o_year"))
-      .repartition(p, $"o_orderkey")
-      .localCheckpoint()
-    val l = t(s, dir, "lineitem").select(
+      year($"o_orderdate").cast("long").as("o_year")), "o_orderkey")
+    val l = CheckpointOps.pin(t(s, dir, "lineitem").select(
       guardedKey($"l_orderkey", "q81").as("l_orderkey"), $"l_returnflag",
-      cents($"l_extendedprice", $"l_discount").as("cents"))
-      .repartition(p, $"l_orderkey")
-      .localCheckpoint()
+      cents($"l_extendedprice", $"l_discount").as("cents")), "l_orderkey")
     val oOld = o.withColumn("mo", lit(1L))
     val lOld = l.select($"l_orderkey", $"cents").withColumn("ml", lit(1L))
     val dO = o.filter($"o_orderkey" % 13 === DEL_O_RES)

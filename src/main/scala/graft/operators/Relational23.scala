@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.CheckpointOps
 import graft.functions.TextOps.sqlTokens
 import graft.functions.NativeKernels.word_tokens
 
@@ -190,24 +191,18 @@ object Relational23 extends graft.QueryModule {
     // carries relaxation candidates un-preaggregated (≤ frontier × k
     // rows of 16 B); the min then folds them and the carried state in
     // one pass on the pinned layout.
-    val p = s.sessionState.conf.numShufflePartitions
-    val e = edges.select($"src", $"dst", $"w")
-      .repartition(p, $"src").localCheckpoint()
-    var dist = e.select($"src".as("id")).distinct()
+    val e = CheckpointOps.pin(edges.select($"src", $"dst", $"w"), "src")
+    val seeds = e.select($"src".as("id")).distinct()
       .filter(pmod($"id", lit(SSSP_SEED_MOD)) === 0)
       .select($"id", lit(0L).as("dist_w"))
       .localCheckpoint()
-    for (_ <- 1 to SSSP_ROUNDS) {
-      val prev = dist
-      dist = prev.unionByName(
+    val dist = CheckpointOps.rounds(seeds, SSSP_ROUNDS) { (prev, _) =>
+      CheckpointOps.hashLayout(prev.unionByName(
           e.join(prev.hint("shuffle_hash"), $"src" === $"id")
-            .select($"dst".as("id"), ($"dist_w" + $"w").as("dist_w")))
-        .repartition(p, $"id")
+            .select($"dst".as("id"), ($"dist_w" + $"w").as("dist_w"))), "id")
         .groupBy($"id").agg(min($"dist_w").as("dist_w"))
-        .localCheckpoint()
-      graft.functions.CheckpointOps.freeLocalCheckpoint(prev)
     }
-    graft.functions.CheckpointOps.freeLocalCheckpoint(e)
+    CheckpointOps.freeLocalCheckpoint(e)
     dist.select($"id".as("vec_id"), $"dist_w").orderBy($"vec_id")
   }
 

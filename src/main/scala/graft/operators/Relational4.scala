@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.GroupedTopK
+import graft.functions.{CheckpointOps, GroupedTopK}
 
 /** Fourth tranche: grouping sets (CUBE), a typed top-k Aggregator,
   * analytic window functions (lead/lag/ntile/percent_rank), the SQL
@@ -262,29 +262,28 @@ object Relational4 extends graft.QueryModule {
     // both plan with zero exchanges — rounds exchange only the
     // min-label aggregate (map-side partials kept) plus a
     // label-sized realign of its output.
-    val p = s.sessionState.conf.numShufflePartitions
-    val edges = pairs.union(pairs.select($"b_id", $"a_id"))
-      .toDF("src", "dst").repartition(p, $"dst").localCheckpoint()
+    val edges = CheckpointOps.pin(
+      pairs.union(pairs.select($"b_id", $"a_id")).toDF("src", "dst"), "dst")
     // seed with the one-hop minimum (min of self and direct
     // neighbors) — the result of what would otherwise be round 1
-    var labels = edges.groupBy($"src")
+    val seed = CheckpointOps.pin(edges.groupBy($"src")
       .agg(least(min($"dst"), $"src").as("comp"))
-      .select($"src".as("id"), $"comp")
-      .repartition(p, $"id").localCheckpoint()
-    var converged = false
-    while (!converged) {
-      val prop = edges.join(labels.hint("shuffle_hash"), $"dst" === $"id")
+      .select($"src".as("id"), $"comp"), "id")
+    // each round carries its changed flag inside the checkpointed
+    // frame: the stop test is one 1-row action on the materialized
+    // round instead of a second join+count (`drop` is a no-op on the
+    // flagless seed)
+    val labels = CheckpointOps.rounds(seed,
+        until = _.agg(max($"chg")).head().getAs[Any](0) != true) {
+        (prev, _) =>
+      val cur = prev.drop("chg")
+      val prop = edges.join(cur.hint("shuffle_hash"), $"dst" === $"id")
         .groupBy($"src").agg(min($"comp").as("ncomp"))
-      // carry the changed flag inside the checkpointed frame: one
-      // materializing action per round instead of a second join+count
-      val next = labels.join(prop.hint("shuffle_hash"), $"id" === $"src", "left")
+      cur.join(prop.hint("shuffle_hash"), $"id" === $"src", "left")
         .select($"id",
           least($"comp", coalesce($"ncomp", $"comp")).as("comp"),
           (coalesce($"ncomp", $"comp") < $"comp").as("chg"))
-        .localCheckpoint()
-      converged = next.agg(max($"chg")).head().getAs[Any](0) != true
-      labels = next.drop("chg")
-    }
+    }.drop("chg")
     val sizes = labels.groupBy($"comp").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("comp"))
       .select($"id".as("doc_id"), $"comp".as("cluster_id"), $"cluster_size")
@@ -332,7 +331,7 @@ object Relational4 extends graft.QueryModule {
       pairsIn: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
     val pairs = pairsIn.getOrElse(Dedup.d02(s, dir)).select($"a_id", $"b_id")
-    var edges = pairs
+    val edges = pairs
       .select(greatest($"a_id", $"b_id").as("hi"), least($"a_id", $"b_id").as("lo"))
       .filter($"hi" =!= $"lo").distinct().localCheckpoint()
     // node set pinned from the INITIAL edge snapshot: contraction
@@ -360,7 +359,8 @@ object Relational4 extends graft.QueryModule {
         .groupBy($"n").agg(sum($"h").as("hc"), count(lit(1)).as("c"))
         .filter($"hc" > 1 || ($"hc" >= 1 && $"c" > $"hc"))
         .limit(1).isEmpty
-    while (!isStarForest(edges)) {
+    val stars = CheckpointOps.rounds(edges, until = isStarForest,
+        testFirst = true) { (edges, _) =>
       // Each star phase is ONE window-min over its partition key —
       // not the groupBy-min + join-back formulation, which shuffles
       // the full adjacency TWICE per phase (once partially-aggregated
@@ -386,31 +386,19 @@ object Relational4 extends graft.QueryModule {
       // coincide) are filtered in the same expression, duplicate
       // (hi, m) copies collapse in the end-of-round distinct that the
       // fixpoint signature needs anyway.
-      val next = ls
-        .withColumn("m", min($"lo").over(Window.partitionBy($"hi")))
+      ls.withColumn("m", min($"lo").over(Window.partitionBy($"hi")))
         .select(explode(filter(
           array(
             struct($"hi", $"m".as("lo")),
             struct($"lo".as("hi"), $"m".as("lo"))),
           e => e("hi") =!= e("lo"))).as("e"))
         .select($"e.hi".as("hi"), $"e.lo".as("lo"))
-        .distinct().localCheckpoint()
-      // next is materialized (localCheckpoint is eager), so the
-      // superseded round's blocks are dead — drop them NOW instead of
-      // waiting for the driver GC + ContextCleaner to notice the old
-      // DataFrame is unreachable. Block memory per round is small
-      // (the shrinking edge set), but unbounded rounds of retained
-      // generations inside a long bench suite is exactly the
-      // GC-pressure shape the r7 verdict asked to rule out. NB this
-      // must go through CheckpointOps: Dataset.unpersist is a
-      // plan-cache operation and leaves checkpoint blocks in place.
-      graft.functions.CheckpointOps.freeLocalCheckpoint(edges)
-      edges = next
+        .distinct()
     }
     // fixpoint = star forest: every non-root has exactly one edge, to
     // its component's minimum; roots (and only roots) appear as `lo`
     val labels = nodes
-      .join(edges.select($"hi".as("id"), $"lo".as("c")), Seq("id"), "left")
+      .join(stars.select($"hi".as("id"), $"lo".as("c")), Seq("id"), "left")
       .select($"id", coalesce($"c", $"id").as("comp"))
     val sizes = labels.groupBy($"comp").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("comp"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.CheckpointOps
 import graft.functions.NativeKernels.{vec_dot, vec_dot_q, pair_expand}
 
 /** Similarity search over `embeddings.embedding` (ArrayType(Float), dim
@@ -520,13 +521,13 @@ object Similarity extends graft.QueryModule {
   def lloydIterate(s: SparkSession, dir: String, iters: Int): DataFrame = {
     import s.implicits._
     val e = emb(s, dir).select($"vec_id", $"embedding")
-    var cent = e.filter($"vec_id" < KMEANS_K)
+    val cent0 = e.filter($"vec_id" < KMEANS_K)
       .select($"vec_id".as("cluster"),
         transform($"embedding", x => x.cast("double")).as("cvec"))
       .localCheckpoint()
     val wNear = Window.partitionBy($"vec_id").orderBy($"dist", $"cluster")
     val inertia = Seq.newBuilder[(Int, Double)]
-    for (round <- 1 to iters) {
+    val cent = CheckpointOps.rounds(cent0, iters) { (cent, round) =>
       val assigned = e.crossJoin(broadcast(cent))
         .select($"vec_id", $"embedding", $"cluster",
           sqDistD($"embedding", $"cvec").as("dist"))
@@ -542,14 +543,10 @@ object Similarity extends graft.QueryModule {
         .agg(transform(array_sort(collect_list(struct($"pos", $"c"))),
           x => x.getField("c")).as("cvec"))
         .localCheckpoint()
-      // newCent is materialized — release the superseded round's
-      // blocks for real (see CheckpointOps: Dataset.unpersist is a
-      // plan-cache no-op on local checkpoints)
-      graft.functions.CheckpointOps.freeLocalCheckpoint(assigned)
-      graft.functions.CheckpointOps.freeLocalCheckpoint(cent)
-      cent = newCent
+      CheckpointOps.freeLocalCheckpoint(assigned)
+      newCent
     }
-    graft.functions.CheckpointOps.freeLocalCheckpoint(cent)
+    CheckpointOps.freeLocalCheckpoint(cent)
     inertia.result().toDF("round", "total_inertia")
   }
 
@@ -655,12 +652,13 @@ object Similarity extends graft.QueryModule {
       .filter($"rnk" <= MMR_CAND).drop("rnk")
       .localCheckpoint() // K tiny joins ride this NQ·N-row frame
     val wPick = Window.partitionBy($"q_id").orderBy($"score".desc, $"vec_id")
-    var selected = cand
+    val first1 = cand
       .withColumn("score", lit(0.5) * $"rel")
       .withColumn("r", row_number().over(wPick)).filter($"r" === 1)
       .select($"q_id", $"vec_id", $"embedding", $"nrm", $"score",
         lit(1L).as("sel_rank"))
-    for (k <- 2 to MMR_K) {
+    val selected = CheckpointOps.rounds(first1, MMR_K - 1) { (selected, r) =>
+      val k = r + 1
       val sel = selected.select($"q_id".as("s_q"), $"vec_id".as("s_vid"),
         $"embedding".as("s_emb"), $"nrm".as("s_nrm"))
       val scored = cand
@@ -676,7 +674,7 @@ object Similarity extends graft.QueryModule {
         .withColumn("r", row_number().over(wPick)).filter($"r" === 1)
         .select($"q_id", $"vec_id", $"emb2".as("embedding"),
           $"nrm2".as("nrm"), $"score", lit(k.toLong).as("sel_rank"))
-      selected = selected.union(pick).localCheckpoint()
+      selected.union(pick)
     }
     selected.select($"q_id", $"vec_id".as("neighbor_id"), $"sel_rank",
         round($"score", 4).as("mmr"))
@@ -959,11 +957,8 @@ object Similarity extends graft.QueryModule {
     // SortMergeJoins — plans/r18/s12_pagerank_before.txt exec 3). The
     // realign moves the CUT pool (n·kCand narrow rows), not the full
     // candidate set.
-    val np = s.sessionState.conf.numShufflePartitions
-    val pool = scored.withColumn("rank0", row_number().over(w))
-      .filter($"rank0" <= kCand)
-      .repartition(np, $"vec_id")
-      .localCheckpoint()
+    val pool = CheckpointOps.pin(scored.withColumn("rank0", row_number().over(w))
+      .filter($"rank0" <= kCand), "vec_id")
     // per-node diversity selection: dominance flag per candidate
     // (∃ closer candidate s with cos(s,c) > cos(v,c)), then rank by
     // (reserved, dom, rank0) and keep the first KNN_K — where
@@ -1018,7 +1013,7 @@ object Similarity extends graft.QueryModule {
       // (every caller materializes the edge set immediately anyway);
       // n·k narrow rows, session-GC'd like any superseded frame
       .localCheckpoint()
-    graft.functions.CheckpointOps.freeLocalCheckpoint(pool)
+    CheckpointOps.freeLocalCheckpoint(pool)
     out
   }
 
@@ -1050,16 +1045,22 @@ object Similarity extends graft.QueryModule {
     * 0.85×) is absorbed by the final round(6) — the t06/e04
     * convention. The oracle unrolls the same [[PR_ITERS]] iterations
     * as generated CTEs (recursive-CTE aggregation is not portable). */
-  def s12(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
+  def s12(s: SparkSession, dir: String): DataFrame =
+    overFreshKnnEdges(s, dir)(pageRankOver)
+
+  /** `f` over a fresh in-query build of the s11 edge list `(src,
+    * dst)` — the s12/s16/s20 bench convention, where the build cost
+    * IS the number. `f` must return a frame that no longer reads the
+    * edges (every graph body here ends on a checkpoint): the scratch
+    * edge snapshot is released as soon as `f` returns (the
+    * materialized edges of the *m forms are shared state and stay). */
+  private def overFreshKnnEdges(s: SparkSession, dir: String)(
+      f: DataFrame => DataFrame): DataFrame = {
     val edges = s11Unsorted(s, dir)
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
+      .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .localCheckpoint()
-    // pageRankOver's eager checkpoints mean the returned frame no
-    // longer reads edges — release the scratch edge snapshot here
-    // (s12m's edges are shared materialized state and stay cached)
-    val out = pageRankOver(edges)
-    graft.functions.CheckpointOps.freeLocalCheckpoint(edges)
+    val out = f(edges)
+    CheckpointOps.freeLocalCheckpoint(edges)
     out
   }
 
@@ -1148,39 +1149,31 @@ object Similarity extends graft.QueryModule {
     // (with map-side partial sums — it is the fundamental shuffle of
     // the operator), plus a state-sized realign of its output onto
     // the pinned layout for the carry join.
-    val p = s.sessionState.conf.numShufflePartitions
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("d"))
-    val edgesD = edges.join(deg, Seq("src"))
-      .repartition(p, $"src").localCheckpoint()
+    val edgesD = CheckpointOps.pin(edges.join(deg, Seq("src")), "src")
     // distinct over the src-partitioned snapshot needs no exchange,
     // and the alias keeps hash(src, p) ≡ hash(id, p) for the carry
     val nodes = edgesD.select($"src".as("id")).distinct().localCheckpoint()
     val n = nodes.count()
     val teleport = (1.0 - PR_DAMP) / n.toDouble
-    var r = nodes.select($"id", lit(1.0 / n.toDouble).as("r"))
+    val r0 = nodes.select($"id", lit(1.0 / n.toDouble).as("r"))
       .localCheckpoint()
-    for (_ <- 1 to PR_ITERS) {
+    val r = CheckpointOps.rounds(r0, PR_ITERS) { (r, _) =>
       val contrib = edgesD
         .join(r.withColumnRenamed("id", "src").hint("shuffle_hash"),
           Seq("src"))
         .select($"dst", ($"r" / $"d").as("c"))
         .groupBy($"dst").agg(sum($"c").as("sc"))
-      val next = nodes
+      nodes
         .join(contrib.withColumnRenamed("dst", "id").hint("shuffle_hash"),
           Seq("id"), "left")
         .select($"id",
           (lit(teleport) + lit(PR_DAMP) * coalesce($"sc", lit(0.0))).as("r"))
-        .localCheckpoint()
-      // real block release of the superseded rank snapshot — without
-      // this the loop retains all PR_ITERS+1 checkpoints (the d09 /
-      // bpeRun discipline; at a billion-node graph that's real memory)
-      graft.functions.CheckpointOps.freeLocalCheckpoint(r)
-      r = next
     }
     // the final r is checkpointed, so its plan no longer reads nodes
     // or the degree-folded edge snapshot
-    graft.functions.CheckpointOps.freeLocalCheckpoint(nodes)
-    graft.functions.CheckpointOps.freeLocalCheckpoint(edgesD)
+    CheckpointOps.freeLocalCheckpoint(nodes)
+    CheckpointOps.freeLocalCheckpoint(edgesD)
     r.select($"id".as("vec_id"), round($"r", 6).as("pr"))
       .orderBy($"vec_id")
   }
@@ -1222,43 +1215,30 @@ object Similarity extends graft.QueryModule {
     // hash(dst) still serves BOTH the (dst, slab) vote count and the
     // per-dst argmax (the r17 shared-exchange trick, now with the
     // literal p so the layout survives checkpoints uncoalesced).
-    val p = s.sessionState.conf.numShufflePartitions
-    val edgesP = edges.select($"src", $"dst")
-      .repartition(p, $"src").localCheckpoint()
+    val edgesP = CheckpointOps.pin(edges.select($"src", $"dst"), "src")
     val nodes = edgesP.select($"src".as("id")).distinct().localCheckpoint()
-    var lab = nodes.select($"id", $"id".as("lab")).localCheckpoint()
-    for (_ <- 1 to LPA_ITERS) {
-      val votes = edgesP
+    val lab0 = nodes.select($"id", $"id".as("lab")).localCheckpoint()
+    val lab = CheckpointOps.rounds(lab0, LPA_ITERS) { (lab, _) =>
+      val votes = CheckpointOps.hashLayout(edgesP
         .join(lab.select($"id".as("src"), $"lab".as("slab"))
-          .hint("shuffle_hash"), Seq("src"))
-        .repartition(p, $"dst")
+          .hint("shuffle_hash"), Seq("src")), "dst")
         .groupBy($"dst", $"slab").agg(count(lit(1)).as("n"))
         .groupBy($"dst")
         .agg(min(struct((-$"n").as("negn"), $"slab".as("slab"))).as("best"))
         .select($"dst".as("id"), $"best.slab".as("newlab"))
-      val next = lab.join(votes.hint("shuffle_hash"), Seq("id"), "left")
+      lab.join(votes.hint("shuffle_hash"), Seq("id"), "left")
         .select($"id", coalesce($"newlab", $"lab").as("lab"))
-        .localCheckpoint()
-      graft.functions.CheckpointOps.freeLocalCheckpoint(lab)
-      lab = next
     }
-    graft.functions.CheckpointOps.freeLocalCheckpoint(nodes)
-    graft.functions.CheckpointOps.freeLocalCheckpoint(edgesP)
+    CheckpointOps.freeLocalCheckpoint(nodes)
+    CheckpointOps.freeLocalCheckpoint(edgesP)
     val sizes = lab.groupBy($"lab").agg(count(lit(1)).as("community_size"))
     lab.join(sizes, Seq("lab"))
       .select($"id".as("vec_id"), $"lab".as("community"), $"community_size")
       .orderBy($"vec_id")
   }
 
-  def s16(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val edges = s11Unsorted(s, dir)
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-      .localCheckpoint()
-    val out = labelPropOver(edges)
-    graft.functions.CheckpointOps.freeLocalCheckpoint(edges)
-    out
-  }
+  def s16(s: SparkSession, dir: String): DataFrame =
+    overFreshKnnEdges(s, dir)(labelPropOver)
 
   /** [[s16]] over the once-materialized edge table (the s12m form). */
   def s16m(s: SparkSession, dir: String): DataFrame =
@@ -1403,15 +1383,29 @@ object Similarity extends graft.QueryModule {
     * neighbor. */
   private def greedySearchOver(edges: DataFrame, s: SparkSession,
       dir: String): DataFrame = {
-    import s.implicits._
-    val e = emb(s, dir)
-      .select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
-      .localCheckpoint()
-    val q = e.filter(pmod($"vec_id", lit(GREEDY_QMOD)) === 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("qe"), $"nrm".as("qn"))
+    val (e, q) = walkFrames(s, dir)
     val settled = greedyWalk(edges, e, q).localCheckpoint()
-    graft.functions.CheckpointOps.freeLocalCheckpoint(e)
-    settled.orderBy($"q_id")
+    CheckpointOps.freeLocalCheckpoint(e)
+    settled.orderBy(col("q_id"))
+  }
+
+  /** The corpus as a checkpointed `(vec_id, embedding, nrm)` frame —
+    * what every walk hop joins against; the caller frees it. */
+  private def embNorms(s: SparkSession, dir: String): DataFrame =
+    emb(s, dir)
+      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
+      .localCheckpoint()
+
+  /** Vectors of a norms frame as a walk's query frame `(q_id, qe, qn)`. */
+  private def asQueries(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("q_id"), col("embedding").as("qe"),
+      col("nrm").as("qn"))
+
+  /** The registered search faces' frames: [[embNorms]] and its
+    * vec_id ≡ 0 (mod [[GREEDY_QMOD]]) queries (a lazy view of it). */
+  private def walkFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val e = embNorms(s, dir)
+    (e, asQueries(e.filter(pmod(col("vec_id"), lit(GREEDY_QMOD)) === 0)))
   }
 
   /** The walk body over an EXTERNAL query frame `(q_id, qe, qn)` —
@@ -1489,7 +1483,7 @@ object Similarity extends graft.QueryModule {
     // references `cur` twice (probe + carry), so an uncheckpointed
     // loop doubles the plan per hop — 2^hops branches over the walk
     // frame. Superseded hops freed; the final hop backs the result.
-    var cur = qc.crossJoin(broadcast(ent))
+    val cur0 = qc.crossJoin(broadcast(ent))
       .filter($"e0" =!= $"q_id")
       .select($"q_id", $"e0", $"e0".as("node"),
         cosine($"qe", $"qn", $"ee", $"en").as("cur_cos"),
@@ -1498,8 +1492,7 @@ object Similarity extends graft.QueryModule {
     val dstE = e.select($"vec_id".as("dst"), $"embedding".as("de"),
       $"nrm".as("dn"))
     val ed2 = undirected(edges)
-    for (_ <- 1 to hops) {
-      val prev = cur
+    val settled = CheckpointOps.rounds(cur0, hops) { (cur, _) =>
       val probe = cur.select($"q_id", $"e0", $"node")
       val best = maybeBroadcast(probe, nq * GREEDY_ENTRIES)
         .join(ed2, probe("node") === ed2("src"))
@@ -1515,7 +1508,7 @@ object Similarity extends graft.QueryModule {
       // best is one row per (query, entry) — ≤ NQ·GREEDY_ENTRIES, the
       // broadcast side by construction (a sort-merge join here would
       // exchange the same-sized walk state twice per hop for nothing)
-      cur = cur.join(maybeBroadcast(best, nq * GREEDY_ENTRIES),
+      cur.join(maybeBroadcast(best, nq * GREEDY_ENTRIES),
           Seq("q_id", "e0"), "left")
         .select($"q_id", $"e0",
           when($"bc" > $"cur_cos", $"bn").otherwise($"node").as("node"),
@@ -1523,12 +1516,10 @@ object Similarity extends graft.QueryModule {
             .as("cur_cos"),
           when($"bc" > $"cur_cos", $"n_moves" + 1L).otherwise($"n_moves")
             .as("n_moves"))
-        .localCheckpoint()
-      graft.functions.CheckpointOps.freeLocalCheckpoint(prev)
     }
-    graft.functions.CheckpointOps.freeLocalCheckpoint(qc)
+    CheckpointOps.freeLocalCheckpoint(qc)
     // best walk per query: (cos DESC, node ASC, moves DESC) total order
-    cur
+    settled
       .select($"q_id", struct($"cur_cos", (-$"node").as("negn"),
         $"n_moves").as("w"))
       .groupBy($"q_id").agg(max($"w").as("b"))
@@ -1546,12 +1537,7 @@ object Similarity extends graft.QueryModule {
     * cost claim only holds when the corpus-sized work is one-time. */
   private[graft] def materializedEmbNorms(s: SparkSession,
       dir: String): DataFrame =
-    embNormCache(s, dir) {
-      import s.implicits._
-      emb(s, dir)
-        .select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
-        .localCheckpoint()
-    }
+    embNormCache(s, dir)(embNorms(s, dir))
 
   /** Greedy-walk ANN SERVING over external query vectors `(q_id,
     * embedding)` against `dir`'s corpus — the [[s20m]] semantics
@@ -1575,15 +1561,8 @@ object Similarity extends graft.QueryModule {
 
   /** Fresh-build greedy ANN: derives the knn graph in-query (the
     * s12/s16 bench convention — the build cost IS the number). */
-  def s20(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val edges = s11Unsorted(s, dir)
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-      .localCheckpoint()
-    val out = greedySearchOver(edges, s, dir)
-    graft.functions.CheckpointOps.freeLocalCheckpoint(edges)
-    out
-  }
+  def s20(s: SparkSession, dir: String): DataFrame =
+    overFreshKnnEdges(s, dir)(greedySearchOver(_, s, dir))
 
   /** [[s20]] over the once-materialized edge table — the serving
     * cost (the s12m/s16m/s19m form). */
@@ -1612,35 +1591,29 @@ object Similarity extends graft.QueryModule {
     * search — b0..bH unrolled CTEs over the same edge chain. */
   private def beamSearchOver(edges: DataFrame, s: SparkSession,
       dir: String): DataFrame = {
-    import s.implicits._
-    val e = emb(s, dir)
-      .select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
-      .localCheckpoint()
-    val q = e.filter(pmod($"vec_id", lit(GREEDY_QMOD)) === 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("qe"), $"nrm".as("qn"))
-    val settled = beamWalk(edges, e, q).localCheckpoint()
-    graft.functions.CheckpointOps.freeLocalCheckpoint(e)
-    settled.orderBy($"q_id", $"rank")
+    val (e, q) = walkFrames(s, dir)
+    val settled = rankSelect(beamPoolWalk(edges, e, q)).localCheckpoint()
+    CheckpointOps.freeLocalCheckpoint(e)
+    settled.orderBy(col("q_id"), col("rank"))
+  }
+
+  /** The final rank-select of a surviving beam `(q_id, node, c)`:
+    * (q_id, rank, found_id) by the (c DESC, node) total order — the
+    * unsettled ranked frame of every beam search face (flat
+    * [[s20b]]/[[beamServe]], hierarchical [[s20h]]/[[hierServe]]);
+    * callers settle and free checkpoints. */
+  private def rankSelect(pool: DataFrame): DataFrame = {
+    val trim = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("node"))
+    pool.select(col("q_id"), row_number().over(trim).cast("long").as("rank"),
+      col("node").as("found_id"))
   }
 
   /** The beam body over an EXTERNAL query frame `(q_id, qe, qn)` —
-    * the [[greedyWalk]] split applied to the beam: one body shared by
-    * the registered [[s20b]] and the streaming serving face
-    * ([[beamServe]]). Returns the unsettled ranked frame (q_id, rank,
-    * found_id); callers settle and free checkpoints. */
-  private def beamWalk(edges: DataFrame, e: DataFrame,
-      q: DataFrame): DataFrame = {
-    import e.sparkSession.implicits._
-    val trim = Window.partitionBy($"q_id").orderBy($"c".desc, $"node")
-    beamPoolWalk(edges, e, q).select($"q_id",
-      row_number().over(trim).cast("long").as("rank"),
-      $"node".as("found_id"))
-  }
-
-  /** [[beamWalk]] without the final rank-select — the surviving
-    * pooled frontier `(q_id, node, c)` WITH scores, from the global
-    * entry set (the insert faces' selector and the coarse layer of
-    * the hierarchy read this; the search faces rank it). */
+    * the [[greedyWalk]] split applied to the beam, shared by the
+    * registered [[s20b]], the streaming serving face ([[beamServe]]),
+    * the insert faces' selector and the coarse layer of the
+    * hierarchy: the surviving pooled frontier `(q_id, node, c)` WITH
+    * scores, from the global entry set ([[rankSelect]] ranks it). */
   private def beamPoolWalk(edges: DataFrame, e: DataFrame,
       q: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
@@ -1655,7 +1628,7 @@ object Similarity extends graft.QueryModule {
       .select($"q_id", $"e0".as("node"),
         cosine($"qe", $"qn", $"ee", $"en").as("c"))
     val out = beamPool(edges, e, qc, beam0, nq)
-    graft.functions.CheckpointOps.freeLocalCheckpoint(qc)
+    CheckpointOps.freeLocalCheckpoint(qc)
     out
   }
 
@@ -1705,13 +1678,12 @@ object Similarity extends graft.QueryModule {
     // (coarse pool × undirected degree) — the flat callers' nq·entries
     // is far below it
     val frontierBound = nq * ef * (1 + 2 * KNN_DEG_MAX)
-    var beam = beam0.localCheckpoint()
+    val beamIn = beam0.localCheckpoint()
     val dstE = e.select($"vec_id".as("dst"), $"embedding".as("de"),
       $"nrm".as("dn"))
     val trim = Window.partitionBy($"q_id").orderBy($"c".desc, $"node")
     val ed2 = undirected(edges)
-    for (_ <- 1 to hops) {
-      val prev = beam
+    CheckpointOps.rounds(beamIn, hops) { (prev, _) =>
       val cand = maybeBroadcast(prev.select($"q_id", $"node"), frontierBound)
         .join(ed2, prev("node") === ed2("src"))
         .join(dstE, Seq("dst"))
@@ -1722,17 +1694,14 @@ object Similarity extends graft.QueryModule {
       // pool frontier ∪ expansions, dedupe by node (identical
       // arithmetic → identical c on every path, max is a no-op
       // dedup), keep top-B per query
-      beam = prev.unionByName(cand)
+      prev.unionByName(cand)
         .repartition($"q_id")
         .groupBy($"q_id", $"node")
         .agg(max($"c").as("c"))
         .withColumn("rk", row_number().over(trim))
         .filter($"rk" <= ef)
         .select($"q_id", $"node", $"c")
-        .localCheckpoint()
-      graft.functions.CheckpointOps.freeLocalCheckpoint(prev)
     }
-    beam
   }
 
   /** [[beamSearchOver]] on the once-materialized edge table — the
@@ -1743,15 +1712,15 @@ object Similarity extends graft.QueryModule {
   /** Beam-[[BEAM_B]] ANN SERVING over external query vectors `(q_id,
     * embedding)` — [[greedyServe]]'s top-k sibling: the [[s20b]]
     * semantics restricted to the given query set through the SAME
-    * beam body ([[beamWalk]]), returning (q_id, rank, found_id)
+    * beam body ([[beamPoolWalk]]), returning (q_id, rank, found_id)
     * top-[[BEAM_B]] rows per query. */
   def beamServe(s: SparkSession, dir: String,
       queries: DataFrame): DataFrame = {
     import s.implicits._
     val q = queries.select($"q_id", $"embedding".as("qe"),
       norm($"embedding").as("qn"))
-    beamWalk(materializedKnnEdges(s, dir),
-        materializedEmbNorms(s, dir), q)
+    rankSelect(beamPoolWalk(materializedKnnEdges(s, dir),
+        materializedEmbNorms(s, dir), q))
       .localCheckpoint()
       .orderBy($"q_id", $"rank")
   }
@@ -1794,45 +1763,40 @@ object Similarity extends graft.QueryModule {
     * Measured vs the flat forms in Relational19Spec and the Recall
     * report. */
   def s20h(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = emb(s, dir)
-      .select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
-      .localCheckpoint()
-    val sub = e.filter(inLayer1($"vec_id")).localCheckpoint()
-    val l1edges = knnFromCandidates(sub.select($"vec_id", $"embedding"),
-        candidatePairs(sub.select($"vec_id", $"embedding"))
-          .select($"a_id", $"b_id"))
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-      .localCheckpoint()
+    val (e, q0) = walkFrames(s, dir)
+    val (sub, l1edges) = layer1(e)
     val edges0 = materializedKnnEdges(s, dir)
-    val q = e.filter(pmod($"vec_id", lit(GREEDY_QMOD)) === 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("qe"), $"nrm".as("qn"))
+    val q = q0.localCheckpoint()
+    val settled = rankSelect(hierPool(l1edges, sub, edges0, e, q))
       .localCheckpoint()
-    val settled = hierWalk(l1edges, sub, edges0, e, q).localCheckpoint()
     Seq(e, sub, l1edges, q)
-      .foreach(graft.functions.CheckpointOps.freeLocalCheckpoint)
-    settled.orderBy($"q_id", $"rank")
+      .foreach(CheckpointOps.freeLocalCheckpoint)
+    settled.orderBy(col("q_id"), col("rank"))
   }
 
-  /** The two-layer search body — shared by the registered [[s20h]]
-    * and the streaming serving face ([[hierServe]]), the
-    * greedyWalk/beamWalk split applied to the hierarchy. Coarse
-    * search is a BEAM too (ef>1 at every layer): descending from one
-    * settled winner measured WORSE than the flat beam at sf0.001 — a
-    * single wrong coarse region starves the base beam, where the
-    * coarse top-8 gives it 8 nearby start regions. */
-  private def hierWalk(l1edges: DataFrame, sub: DataFrame,
-      edges0: DataFrame, e: DataFrame, q: DataFrame): DataFrame = {
-    import e.sparkSession.implicits._
-    val trim = Window.partitionBy($"q_id").orderBy($"c".desc, $"node")
-    hierPool(l1edges, sub, edges0, e, q).select($"q_id",
-      row_number().over(trim).cast("long").as("rank"),
-      $"node".as("found_id"))
+  /** The knn edge table `(src, dst)` of a `(vec_id, embedding)`
+    * frame, built by the rotation-bucket machinery and checkpointed. */
+  private def knnEdgesOf(v: DataFrame): DataFrame =
+    knnFromCandidates(v, candidatePairs(v).select(col("a_id"), col("b_id")))
+      .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
+      .localCheckpoint()
+
+  /** The coarse layer of a norms frame: its 1/[[HIER_MOD]] sample
+    * (checkpointed) and the sample's own knn edges. */
+  private def layer1(e: DataFrame): (DataFrame, DataFrame) = {
+    val sub = e.filter(inLayer1(col("vec_id"))).localCheckpoint()
+    (sub, knnEdgesOf(sub.select(col("vec_id"), col("embedding"))))
   }
 
-  /** [[hierWalk]] without the final rank-select — the surviving base
-    * beam WITH scores, for the hierarchical insert ([[s21h]]), the
-    * beamPoolWalk/beamPool split applied to the hierarchy. */
+  /** The two-layer search body — shared by the registered [[s20h]],
+    * the streaming serving face ([[hierServe]]) and the hierarchical
+    * insert ([[s21h]]): the surviving base beam WITH scores
+    * ([[rankSelect]] ranks it), the beamPoolWalk/beamPool split
+    * applied to the hierarchy. Coarse search is a BEAM too (ef>1 at
+    * every layer): descending from one settled winner measured WORSE
+    * than the flat beam at sf0.001 — a single wrong coarse region
+    * starves the base beam, where the coarse top-8 gives it 8 nearby
+    * start regions. */
   private def hierPool(l1edges: DataFrame, sub: DataFrame,
       edges0: DataFrame, e: DataFrame, q: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
@@ -1866,7 +1830,7 @@ object Similarity extends graft.QueryModule {
       .select($"q_id", $"node",
         cosine($"qe", $"qn", $"ne", $"nn").as("c"))
     val out = beamPool(edges0, e, qc, beam0, nq)
-    graft.functions.CheckpointOps.freeLocalCheckpoint(qc)
+    CheckpointOps.freeLocalCheckpoint(qc)
     out
   }
 
@@ -1878,19 +1842,12 @@ object Similarity extends graft.QueryModule {
     * builds once, never per refresh. */
   private[graft] def materializedL1Edges(s: SparkSession,
       dir: String): DataFrame =
-    l1EdgeCache(s, dir) {
-      import s.implicits._
-      val sub = materializedEmbNorms(s, dir).filter(inLayer1($"vec_id"))
-        .select($"vec_id", $"embedding")
-      knnFromCandidates(sub,
-          candidatePairs(sub).select($"a_id", $"b_id"))
-        .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-        .localCheckpoint()
-    }
+    l1EdgeCache(s, dir)(knnEdgesOf(materializedEmbNorms(s, dir)
+      .filter(inLayer1(col("vec_id"))).select(col("vec_id"), col("embedding"))))
 
   /** Hierarchical ANN SERVING over external query vectors `(q_id,
     * embedding)` — the best-measured backend ([[s20h]]'s two-layer
-    * search) through the SAME [[hierWalk]] body, over once-
+    * search) through the SAME [[hierPool]] body, over once-
     * materialized assets only (base edges, coarse edges, norms):
     * zero corpus-sized work per refresh. */
   def hierServe(s: SparkSession, dir: String,
@@ -1899,8 +1856,8 @@ object Similarity extends graft.QueryModule {
     val e = materializedEmbNorms(s, dir)
     val q = queries.select($"q_id", $"embedding".as("qe"),
       norm($"embedding").as("qn"))
-    hierWalk(materializedL1Edges(s, dir), e.filter(inLayer1($"vec_id")),
-        materializedKnnEdges(s, dir), e, q)
+    rankSelect(hierPool(materializedL1Edges(s, dir),
+        e.filter(inLayer1($"vec_id")), materializedKnnEdges(s, dir), e, q))
       .localCheckpoint()
       .orderBy($"q_id", $"rank")
   }
@@ -1992,7 +1949,7 @@ object Similarity extends graft.QueryModule {
       .select($"src", $"dst", round($"cos", 4).as("cos_sim"))
       .orderBy($"src", $"dst")
       .localCheckpoint()
-    graft.functions.CheckpointOps.freeLocalCheckpoint(no)
+    CheckpointOps.freeLocalCheckpoint(no)
     out
   }
 
@@ -2012,20 +1969,8 @@ object Similarity extends graft.QueryModule {
   /** The arrivals' own out-edges `(src, dst, cos)`: one beam per
     * arrival over the base graph, cut to top-[[KNN_K]]. */
   private[graft] def newOutEdges(baseEdges: DataFrame, baseE: DataFrame,
-      newVecs: DataFrame): DataFrame = {
-    import baseE.sparkSession.implicits._
-    val qc = newVecs.localCheckpoint()
-    val nq = qc.count()
-    val ent = entrySet(baseE)
-    val beam0 = qc.crossJoin(broadcast(ent))
-      .filter($"e0" =!= $"q_id")
-      .select($"q_id", $"e0".as("node"),
-        cosine($"qe", $"qn", $"ee", $"en").as("c"))
-    val out = cutTopK(beamPool(baseEdges, baseE, qc, beam0, nq),
-      knnK(baseE.count()))
-    graft.functions.CheckpointOps.freeLocalCheckpoint(qc)
-    out
-  }
+      newVecs: DataFrame): DataFrame =
+    cutTopK(beamPoolWalk(baseEdges, baseE, newVecs), knnK(baseE.count()))
 
   /** HIERARCHICAL INSERT (s21h) — [[s21]] with the two-layer search
     * as its neighbor selector: the arrival descends the coarse layer
@@ -2043,26 +1988,25 @@ object Similarity extends graft.QueryModule {
     * chains (base, base∩sample) + the coarse beam + the seed
     * expansion + the base beam + both insert cuts. */
   def s21h(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = emb(s, dir)
-      .select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
-      .localCheckpoint()
-    val baseE = e.filter(!isArrival($"vec_id")).localCheckpoint()
-    val newV = e.filter(isArrival($"vec_id"))
-      .select($"vec_id".as("q_id"), $"embedding".as("qe"), $"nrm".as("qn"))
-    val sub = baseE.filter(inLayer1($"vec_id")).localCheckpoint()
-    val l1edges = knnFromCandidates(sub.select($"vec_id", $"embedding"),
-        candidatePairs(sub.select($"vec_id", $"embedding"))
-          .select($"a_id", $"b_id"))
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-      .localCheckpoint()
+    val (e, baseE, newV) = insertFrames(s, dir)
+    val (sub, l1edges) = layer1(baseE)
     val edges0 = materializedBaseEdges(s, dir)
     val out = finishInsert(edges0, baseE,
       cutTopK(hierPool(l1edges, sub, edges0, baseE, newV),
         knnK(baseE.count())))
     Seq(e, baseE, sub, l1edges)
-      .foreach(graft.functions.CheckpointOps.freeLocalCheckpoint)
+      .foreach(CheckpointOps.freeLocalCheckpoint)
     out
+  }
+
+  /** The fresh-build insert faces' frames: [[embNorms]], its
+    * non-arrival base (checkpointed; the caller frees both) and the
+    * arrivals as a query frame (a lazy view). */
+  private def insertFrames(s: SparkSession,
+      dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val e = embNorms(s, dir)
+    (e, e.filter(!isArrival(col("vec_id"))).localCheckpoint(),
+      asQueries(e.filter(isArrival(col("vec_id")))))
   }
 
   /** Exact (unrounded) cosines for an existing `(src, dst)` edge set —
@@ -2097,21 +2041,11 @@ object Similarity extends graft.QueryModule {
     * non-arrival subset, the same rotation-bucket machinery) in-query
     * — the s12/s16/s20 bench convention — then wires the arrivals in. */
   def s21(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = emb(s, dir)
-      .select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
-      .localCheckpoint()
-    val baseE = e.filter(!isArrival($"vec_id")).localCheckpoint()
-    val newV = e.filter(isArrival($"vec_id"))
-      .select($"vec_id".as("q_id"), $"embedding".as("qe"), $"nrm".as("qn"))
-    val baseEdges = knnFromCandidates(baseE.select($"vec_id", $"embedding"),
-        candidatePairs(baseE.select($"vec_id", $"embedding"))
-          .select($"a_id", $"b_id"))
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-      .localCheckpoint()
+    val (e, baseE, newV) = insertFrames(s, dir)
+    val baseEdges = knnEdgesOf(baseE.select(col("vec_id"), col("embedding")))
     val out = insertIntoGraph(baseEdges, baseE, newV)
     Seq(e, baseE, baseEdges)
-      .foreach(graft.functions.CheckpointOps.freeLocalCheckpoint)
+      .foreach(CheckpointOps.freeLocalCheckpoint)
     out
   }
 
@@ -2134,13 +2068,8 @@ object Similarity extends graft.QueryModule {
     * it, so the per-arrival cost is just the beam. */
   private[graft] def materializedBaseEdges(s: SparkSession,
       dir: String): DataFrame =
-    baseEdgeCache(s, dir) {
-      import s.implicits._
-      val b = materializedBaseE(s, dir).select($"vec_id", $"embedding")
-      knnFromCandidates(b, candidatePairs(b).select($"a_id", $"b_id"))
-        .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-        .localCheckpoint()
-    }
+    baseEdgeCache(s, dir)(knnEdgesOf(
+      materializedBaseE(s, dir).select(col("vec_id"), col("embedding"))))
 
   /** [[s21]] over the once-materialized base assets — the ingest
     * serving cost (the s20m convention): per refresh, only the
@@ -2148,8 +2077,7 @@ object Similarity extends graft.QueryModule {
   def s21m(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val baseE = materializedBaseE(s, dir)
-    val newV = materializedEmbNorms(s, dir).filter(isArrival($"vec_id"))
-      .select($"vec_id".as("q_id"), $"embedding".as("qe"), $"nrm".as("qn"))
+    val newV = asQueries(materializedEmbNorms(s, dir).filter(isArrival($"vec_id")))
     insertIntoGraph(materializedBaseEdges(s, dir), baseE, newV)
   }
 
@@ -2256,7 +2184,7 @@ object Similarity extends graft.QueryModule {
       .select($"src", $"dst", round($"cos", 4).as("cos_sim"))
       .orderBy($"src", $"dst")
       .localCheckpoint()
-    Seq(kept, delC).foreach(graft.functions.CheckpointOps.freeLocalCheckpoint)
+    Seq(kept, delC).foreach(CheckpointOps.freeLocalCheckpoint)
     out
   }
 
@@ -2271,16 +2199,14 @@ object Similarity extends graft.QueryModule {
     * bench convention), then tombstones + repairs. */
   def s22(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = emb(s, dir)
-      .select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
-      .localCheckpoint()
+    val e = embNorms(s, dir)
     val edgesCos = s11Unsorted(s, dir)
       .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
       .localCheckpoint()
     val out = deleteFromGraph(baseEdgeCos(edgesCos, e), e,
       registeredTombstones(e))
     Seq(e, edgesCos)
-      .foreach(graft.functions.CheckpointOps.freeLocalCheckpoint)
+      .foreach(CheckpointOps.freeLocalCheckpoint)
     out
   }
 
@@ -2354,7 +2280,7 @@ object Similarity extends graft.QueryModule {
     val out = insertIntoGraph(
       repaired.select($"src", $"dst"), liveE, updated)
     Seq(liveE, repaired)
-      .foreach(graft.functions.CheckpointOps.freeLocalCheckpoint)
+      .foreach(CheckpointOps.freeLocalCheckpoint)
     out
   }
 
@@ -2374,7 +2300,7 @@ object Similarity extends graft.QueryModule {
       batch.select($"q_id", $"embedding".as("qe"),
         norm($"embedding").as("qn")))
     Seq(ids, liveE, repaired)
-      .foreach(graft.functions.CheckpointOps.freeLocalCheckpoint)
+      .foreach(CheckpointOps.freeLocalCheckpoint)
     out
   }
 
@@ -2410,8 +2336,6 @@ object Similarity extends graft.QueryModule {
 
   // ---- DuckDB oracles (identical arithmetic, generated literals) ----
 
-  private val sqlDot =
-    s"list_sum([CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) for i in range(1, ${DIM + 1})])"
   private val sqlNormE =
     s"sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE) for i in range(1, ${DIM + 1})]))"
 

@@ -96,7 +96,7 @@ object AnnStream {
       admitted.select(col("q_id"), col("embedding")).localCheckpoint())
 
   /** [[serveGraphRefresh]]'s top-k sibling: the beam walk
-    * (`Similarity.beamServe` → the same `beamWalk` as the registered
+    * (`Similarity.beamServe` → the same `beamPoolWalk` as the registered
     * s20b), returning a ranked top-k per admitted query — output for
     * query set Q equals batch s20b restricted to Q. */
   def serveBeamRefresh(spark: SparkSession, dir: String,
@@ -105,7 +105,7 @@ object AnnStream {
       admitted.select(col("q_id"), col("embedding")).localCheckpoint())
 
   /** The hierarchical backend (`Similarity.hierServe` → the same
-    * two-layer `hierWalk` as the registered s20h) — the
+    * two-layer `hierPool` as the registered s20h) — the
     * best-measured serving quality (Recall report: hit@1 4× the flat
     * beam at sf0.1) over once-materialized assets only (base edges,
     * coarse edges, norms): zero corpus-sized work per refresh.

@@ -147,10 +147,21 @@ class Relational10Spec extends SparkSpec {
     // d09's star loop: only the FINAL round's checkpoint may survive
     // (it backs the returned frame); t34's merge loop frees everything.
     // Dataset.unpersist was a plan-cache no-op here — without
-    // CheckpointOps each round leaked one persisted RDD.
+    // CheckpointOps each round leaked one persisted RDD. The other
+    // round loops (d06's min-label rounds, PageRank, label-propagation
+    // communities, SSSP, MMR, trained PQ) run through the same
+    // CheckpointOps.rounds; the shared knn edge asset the *m forms
+    // read is built first, so it is not counted as a leak.
+    Similarity.materializedKnnEdgesCos(spark, sf).count()
     val before = sc.getPersistentRDDs.size
     graft.operators.Relational4.d09(spark, sf).count()
     graft.operators.Relational10.t34(spark, sf).count()
+    graft.operators.Relational4.d06(spark, sf).count()
+    Similarity.s12m(spark, sf).count()
+    Similarity.s16m(spark, sf).count()
+    graft.operators.Relational23.s24m(spark, sf).count()
+    Similarity.s17(spark, sf).count()
+    graft.operators.Relational13.s13t(spark, sf).count()
     System.gc() // let ContextCleaner reap frames that went unreachable
     Thread.sleep(500)
     val after = sc.getPersistentRDDs.size

@@ -59,7 +59,7 @@ class StreamAnnSpec extends SparkSpec {
         s"streamed beam serve diverged from batch s20b: sizes " +
           s"${servedBeam.size}/${batchBeam.size}")
       // the hierarchical backend ≡ batch s20h (materialized-asset
-      // path vs the fresh-build registered query — same hierWalk)
+      // path vs the fresh-build registered query — same hierPool)
       val batchHier = operators.Similarity.s20h(spark, sf)
         .collect().map(_.toSeq).toSeq
       val servedHier = AnnStream.serveHierRefresh(spark, sf, admitted)

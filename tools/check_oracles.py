@@ -5,7 +5,10 @@ Runs after `sbt "runMain graft.Verify <sfDir> <outDir>"`:
 for each query result parquet in <outDir>, runs the matching oracle SQL
 from oracle_sql.json in DuckDB (tables = views over the same sfDir
 parquet), sorts columns by name and rows by all columns, and compares
-cell-by-cell. Exit nonzero on any mismatch.
+cell-by-cell. Exit nonzero on any mismatch. Several queries share one
+oracle text (e.g. d06/d06m/d09/d14): DuckDB runs each distinct text
+once and every query sharing it compares against the same rows, so a
+query's DuckDB seconds are ~0 when an earlier query ran its text.
 
 Usage: python3 tools/check_oracles.py /root/testdata/sf0.01 /tmp/verify_out \
            [CORRECTNESS_local.json]
@@ -47,6 +50,7 @@ def main(sf_dir, out_dir, json_out=None):
         oracles = json.load(f)
     failures = 0
     report = {}
+    oracle_memo = {}  # SQL text -> (sorted columns, rows in that order)
     secs = {}  # name -> (DuckDB seconds, compare seconds)
     for name in sorted(oracles):
         sql = oracles[name]
@@ -64,11 +68,13 @@ def main(sf_dir, out_dir, json_out=None):
             spark_rows = con.sql(
                 "SELECT " + ", ".join(f'"{c}"' for c in spark_cols) +
                 f" FROM '{res_dir}/*.parquet'").fetchall()
-            oracle_rel = con.sql(sql)
-            o_cols = sorted(oracle_rel.columns)
-            idx = [oracle_rel.columns.index(c) for c in o_cols]
-            oracle_rows = [tuple(r[i] for i in idx)
-                           for r in oracle_rel.fetchall()]
+            if sql not in oracle_memo:
+                oracle_rel = con.sql(sql)
+                cols = sorted(oracle_rel.columns)
+                idx = [oracle_rel.columns.index(c) for c in cols]
+                oracle_memo[sql] = (cols, [tuple(r[i] for i in idx)
+                                           for r in oracle_rel.fetchall()])
+            o_cols, oracle_rows = oracle_memo[sql]
         except Exception as e:
             secs[name] = (time.perf_counter() - t0, 0.0)
             print(f"[ERR ] {name}: {e}")
